@@ -209,6 +209,9 @@ class Dialect:
     parts: tuple[str, ...]  # per-field chunks, for prefix diagnostics
     fields: tuple[str, ...]
     optional_fields: frozenset[str] = field(default_factory=frozenset)
+    # fields whose grammar admits '"', '\\' or bytes below 0x20: the only
+    # ones NDJSON output has to escape (jsonout.arrow_ndjson)
+    free_text: frozenset[str] = field(default_factory=frozenset)
 
     @property
     def regex(self) -> re.Pattern[str]:
@@ -275,6 +278,10 @@ ALB = Dialect(
     parts=tuple(ALB_PARTS),
     fields=tuple(ALB_FIELDS),
     optional_fields=frozenset({"tid"}),
+    free_text=frozenset({
+        "url", "user_agent", "redirect_url", "trace_id", "chosen_cert_arn",
+        "target_group_arn",
+    }),
 )
 CLASSIC = Dialect(
     name=SINK_CLASSIC,
@@ -282,6 +289,7 @@ CLASSIC = Dialect(
     pattern=CLASSIC_PATTERN,
     parts=tuple(CLASSIC_PARTS),
     fields=tuple(CLASSIC_FIELDS),
+    free_text=frozenset({"url", "user_agent"}),
 )
 
 ALB_NAMED_PATTERN = named_pattern(ALB_PATTERN, ALB_FIELDS)

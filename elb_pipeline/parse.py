@@ -1,14 +1,26 @@
-"""Vectorized parse + route stage (pure-Arrow, RE2).
+"""Vectorized parse + route stage (pure-Arrow: RE2 match, then spans).
 
 The reference parses row-at-a-time with a compiled linear-time regex and
 reused capture buffers (alb.rs:199-243, classic_lb.rs:109-139). The
 Spark-native equivalent here is a family of **pure-Arrow** ``mapInArrow``
-operators built on pyarrow's C++ RE2 engine — zero Python objects per
-row, field values living in Arrow buffers end to end. This is the closest
-Spark analog of the reference's zero-copy design (RE2 is the same
-linear-time engine family as Rust's ``regex``).
+operators — zero Python objects per row, field values living in Arrow
+buffers end to end. They work match-then-span:
 
-Operator split — measured on this container (8M rows, local[32]):
+- validity is a capture-free anchored match under pyarrow's C++ RE2 (its
+  DFA path; RE2 is the same linear-time engine family as Rust's
+  ``regex``);
+- ALB fields are then cut from the matching rows' UTF-8 buffer by a
+  vectorized delimiter tokenizer (:mod:`elb_pipeline.albspan`), the
+  analog of the reference's struct of borrowed byte slices. Asking RE2
+  for the 33 capture groups would drop it to its NFA at ~20× the cost;
+- Classic fields come from one 18-group RE2 extract over the non-ALB
+  rows, which is also their validity test (cheap on the non-ALB rows).
+
+``parse_arrow_text`` / ``with_parsed`` keep the full RE2 capture
+extraction as the test reference.
+
+Operator split — measured on a 32-CPU host (8M rows, local[32]), before
+ALB fields were cut by span:
 
 ================================  ==========  =============================
 operator                          wall (8M)    use
@@ -48,6 +60,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from elb_pipeline.albspan import alb_children
 from elb_pipeline.dialects import (
     ALB,
     ALB_FIELDS,
@@ -158,10 +171,16 @@ def _dict_unique(text: pa.Array) -> tuple[pa.Array | None, pa.Array]:
 # ---------------------------------------------------------------------------
 
 
-def _route_sink_unique(text: pa.Array) -> pa.Array:
-    alb_ok = pc.fill_null(
+def _alb_match(text: pa.Array) -> pa.Array:
+    """Capture-free anchored ALB match (RE2's DFA path) — the only ALB
+    validity test; null text → False."""
+    return pc.fill_null(
         pc.match_substring_regex(text, pattern=ALB_NAMED_PATTERN), False
     )
+
+
+def _route_sink_unique(text: pa.Array) -> pa.Array:
+    alb_ok = _alb_match(text)
     clb_ok = pc.fill_null(
         pc.match_substring_regex(text, pattern=CLASSIC_NAMED_PATTERN), False
     )
@@ -237,9 +256,7 @@ def with_sink(
 
 
 def _sink_mask_unique(text: pa.Array, sink: str) -> pa.Array:
-    alb_ok = pc.fill_null(
-        pc.match_substring_regex(text, pattern=ALB_NAMED_PATTERN), False
-    )
+    alb_ok = _alb_match(text)
     if sink == SINK_ALB:
         return alb_ok
     clb_ok = pc.fill_null(
@@ -309,15 +326,15 @@ def routed_struct(
     names = [*passthrough, "parsed"]
 
     extract = (
-        _extract_alb_children if dialect == SINK_ALB else _extract_clb_children
+        _alb_children_valid if dialect == SINK_ALB else _extract_clb_children
     )
 
     def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         _pin_worker_pools()
         for batch in batches:
-            # capture-free match decides validity (DFA — ~1/15th the cost
-            # of the 33-group extraction); extraction then runs once per
-            # DISTINCT kept line (_dict_unique inside the extract helper)
+            # capture-free match decides validity (RE2's DFA path); field
+            # spans are then cut once per DISTINCT kept line (_dict_unique
+            # inside the extract helper)
             text = _as_string_array(batch.column(n_pass))
             mask = _sink_mask(text, dialect)
             kept = batch.filter(mask)
@@ -349,8 +366,10 @@ def routed_dialect_json(
 
     ``passthrough``: select exactly those columns + text before the map
     and emit ``passthrough + [json]`` — the text does not cross back
-    (guide §4.1); validity comes from the extraction itself (one RE2
-    pass for the ALB side instead of match + extract).
+    (guide §4.1). Validity comes from a capture-free match over every row
+    (_sink_mask); fields are then extracted from the kept rows only — by
+    span for ALB (:func:`albspan.alb_children`), by RE2 extract for
+    Classic.
     """
     from elb_pipeline.jsonout import arrow_ndjson
 
@@ -379,9 +398,7 @@ def routed_dialect_json(
         out_fields + [T.StructField("json", T.StringType(), True)]
     )
 
-    extract_u = (
-        _extract_alb_children_u if dialect == SINK_ALB else _extract_clb_children_u
-    )
+    extract_u = alb_children if dialect == SINK_ALB else _extract_clb_children_u
 
     def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         _pin_worker_pools()
@@ -428,19 +445,16 @@ def _route_json_unique(text: pa.Array) -> tuple[pa.Array, pa.Array]:
     :func:`route_json_arrow`.
 
     Work per line: one capture-free ALB MATCH over every row (RE2's DFA
-    path — measured ~1/15th the cost of the 33-group extraction, so
-    validity is decided before any capture work), one 33-group ALB
-    extract over only the matching rows, one Classic extract over only
-    the non-ALB remainder (extraction doubles as the validity test there
-    — the 18-group Classic pattern extracts faster than the ALB match
-    runs), and C++-side NDJSON assembly on the matching subsets. json is
-    null for malformed rows."""
+    path), which is the only ALB validity test; field spans cut from the
+    matching rows' UTF-8 buffer (:func:`albspan.alb_children` — no RE2
+    captures); one 18-group Classic extract over only the non-ALB
+    remainder (extraction doubles as the validity test there); and
+    C++-side NDJSON assembly on the matching subsets. json is null for
+    malformed rows."""
     from elb_pipeline.jsonout import arrow_ndjson
 
     n = len(text)
-    alb_ok = pc.fill_null(
-        pc.match_substring_regex(text, pattern=ALB_NAMED_PATTERN), False
-    )
+    alb_ok = _alb_match(text)
     rest_mask = pc.invert(alb_ok)
 
     text_rest = text.filter(rest_mask)
@@ -460,14 +474,7 @@ def _route_json_unique(text: pa.Array) -> tuple[pa.Array, pa.Array]:
 
     json_col = pa.nulls(n, pa.string())
     if pc.any(alb_ok).as_py():
-        alb_ext = pc.extract_regex(
-            text.filter(alb_ok), pattern=ALB_NAMED_PATTERN
-        )
-        children = list(alb_ext.flatten())
-        tid_i = len(ALB_FIELDS) - 1
-        children[tid_i] = pc.if_else(
-            pc.equal(children[tid_i], pa.scalar("")), _NULL_STR, children[tid_i]
-        )
+        children = alb_children(text.filter(alb_ok))
         js = arrow_ndjson(list(ALB_FIELDS), children, optional_last=True)
         json_col = pc.if_else(alb_ok, _scatter(js, alb_ok), json_col)
     if pc.any(clb_ok_rest).as_py():
@@ -587,15 +594,10 @@ def routed_json_both(
 
 
 def _extract_alb_children_u(text: pa.Array) -> list[pa.Array]:
-    ext = pc.extract_regex(text, pattern=ALB_NAMED_PATTERN)
-    children = list(ext.flatten())  # flatten propagates no-match nulls
-    # optional tid extracts as '' when absent — normalize to null (a real
-    # tid is TID_+32 chars or '-', never empty; cf. alb.rs:81-85,188)
-    tid_i = len(ALB_FIELDS) - 1
-    children[tid_i] = pc.if_else(
-        pc.equal(children[tid_i], pa.scalar("")), _NULL_STR, children[tid_i]
-    )
-    return [c.cast(pa.string()) if c.type != pa.string() else c for c in children]
+    """ALB fields of any lines: match, then spans of the matching rows;
+    every field is null on rows that are not ALB."""
+    ok = _alb_match(text)
+    return [_scatter(c, ok) for c in alb_children(text.filter(ok))]
 
 
 def _extract_clb_children_u(text: pa.Array) -> list[pa.Array]:
@@ -605,20 +607,23 @@ def _extract_clb_children_u(text: pa.Array) -> list[pa.Array]:
     ]
 
 
-def _extract_alb_children(text: pa.Array) -> list[pa.Array]:
-    idx, uniq = _dict_unique(text)
-    children = _extract_alb_children_u(uniq)
-    if idx is None:
-        return children
-    return [c.take(idx) for c in children]
+def _hash_consed(extract_u):
+    """Run ``extract_u`` once per distinct line (_dict_unique) and scatter
+    its field arrays back to every row."""
+
+    def extract(text: pa.Array) -> list[pa.Array]:
+        idx, uniq = _dict_unique(text)
+        children = extract_u(uniq)
+        if idx is None:
+            return children
+        return [c.take(idx) for c in children]
+
+    return extract
 
 
-def _extract_clb_children(text: pa.Array) -> list[pa.Array]:
-    idx, uniq = _dict_unique(text)
-    children = _extract_clb_children_u(uniq)
-    if idx is None:
-        return children
-    return [c.take(idx) for c in children]
+_extract_alb_children = _hash_consed(_extract_alb_children_u)
+_extract_clb_children = _hash_consed(_extract_clb_children_u)
+_alb_children_valid = _hash_consed(alb_children)
 
 
 def with_dialect_struct(

@@ -11,7 +11,9 @@ the space around them:
    json) to exactly the fields the grammar extracted, for every generated
    valid line, including escape-heavy quoted fields;
 3. failed-position — bisection equals the linear DFA-alive walk on every
-   corrupted line (byte-exact reference semantics).
+   corrupted line (byte-exact reference semantics);
+4. span extraction — on adversarial valid ALB lines, built field by field
+   from ``ALB_PARTS``, the span tokenizer equals RE2's captures.
 """
 
 from __future__ import annotations
@@ -24,10 +26,12 @@ import pyarrow.compute as pc
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from elb_pipeline.albspan import alb_children
 from elb_pipeline.dialects import (
     ALB,
     ALB_FIELDS,
     ALB_NAMED_PATTERN,
+    ALB_PARTS,
     CLASSIC,
     CLASSIC_NAMED_PATTERN,
     parse_line,
@@ -139,6 +143,106 @@ def test_failed_position_bisection_equals_linear_walk(line):
                 linear = length - 1
                 break
         assert failed_position_bytes(raw, d) == linear
+
+
+# ---------------------------------------------------------------------------
+# span extraction vs RE2 captures on adversarial valid ALB lines
+# ---------------------------------------------------------------------------
+
+_HEX = "0123456789abcdefABCDEF"
+
+
+def _tokens(*choices):
+    return st.lists(st.one_of(*choices), max_size=12).map("".join)
+
+
+_hex_escape = st.builds(
+    lambda short, h: "\\x" + (h[:2] if short else h),
+    st.booleans(), st.text(_HEX, min_size=8, max_size=8),
+)
+# ALB quoted-string body: raw chars (spaces, tabs, non-ASCII), \", runs of
+# \\ and \xHH escapes, plus fragments that look like a version suffix
+_escaped_body = _tokens(
+    st.sampled_from(list('aZ0/-.:=é\t ') + ["HTTP/", " HTTP/1.1", " -", " - ", "  "]),
+    st.just('\\"'),
+    st.integers(1, 3).map(lambda k: "\\\\" * k),
+    _hex_escape,
+)
+# trace_id / chosen_cert_arn body: anything but \ and " (newlines too), or \"
+_quote_escaped_body = _tokens(
+    st.sampled_from(list('aZ0-=;. \t\n')), st.just('\\"'), st.just('\\"\\"')
+)
+_stamp = st.integers(0, 10**6 - 1).map(lambda us: f"2024-05-28T13:34:14.{us:06d}Z")
+
+
+@st.composite
+def adversarial_alb_line(draw):
+    """A valid ALB line, one piece per ``ALB_PARTS`` entry, each piece
+    checked against its part: free-text fields carry spaces, escaped
+    quotes, backslash runs and hex escapes; the version is empty, ``-`` or
+    ``HTTP/x``, with or without the optional space; target_group_arn may
+    hold ``"`` and ``\\``."""
+    sample = lambda xs: draw(st.sampled_from(xs))
+    version = sample(["", "-", "HTTP/1.1", "HTTP/2.0", "HTTP/9."])
+    tga = draw(_tokens(st.sampled_from(list('ax:/"\\-\n') + ['\\"', '\\\\"'])))
+    tid = sample([None, "-", "TID_" + "a0Z9" * 8])
+    pieces = [
+        sample(["http", "https", "h2", "grpcs", "ws", "wss"]),
+        " " + draw(_stamp),
+        " " + sample(["app/my-alb/0123", "a", "net/x-y/z9"]),
+        " " + sample(["1.2.3.4", "123.123.123.123"]),
+        ":" + sample(["1", "65432"]),
+        " " + sample(["-", "10.0.0.1:80"]),
+        " " + sample(["-1", "0.000"]),
+        " " + sample(["-1", "0.004"]),
+        " " + sample(["-1", "12.5"]),
+        " " + sample(["-", "200", "503"]),
+        " " + sample(["-", "200"]),
+        " " + sample(["0", "288"]),
+        " " + sample(["0", "131"]),
+        ' "' + sample(["GET", "-", "--location", "SSTP_DUPLEX_POST"]),
+        " " + draw(_escaped_body),
+        " " + version + sample(["", " "]) + '"',
+        ' "' + draw(_escaped_body) + '"',
+        " " + sample(["-", "ECDHE-RSA-AES128-GCM-SHA256", "TLS_AES_128_GCM_SHA256"]),
+        " " + sample(["-", "TLSv1.2"]),
+        " " + sample(["-", "arn:" + tga]),
+        ' "' + draw(_quote_escaped_body) + '"',
+        ' "' + sample(["", " ", "-", " some-sub.example.com", "a*:_"]) + '"',
+        ' "' + sample(["-", "session-reused", "arn:" + draw(_quote_escaped_body)]) + '"',
+        " " + sample(["-", "-1", "0", "99999"]),
+        " " + draw(_stamp),
+        ' "' + sample(["", "-", "forward", "waf,fixed-response"]) + '"',
+        ' "' + sample(["-", draw(_escaped_body)]) + '"',
+        ' "' + sample(["-", "AuthInvalidCookie"]) + '"',
+        ' "' + sample(["-", "10.0.0.1:80", "10.0.0.1:80 10.0.0.2:8080"]) + '"',
+        ' "' + sample(["-", "200", "200 404"]) + '"',
+        ' "' + sample(["-", "Acceptable", "Severe"]) + '"',
+        ' "' + sample(["-", "NonCompliantVersion"]) + '"',
+        "" if tid is None else " " + tid,
+    ]
+    for part, piece in zip(ALB_PARTS, pieces, strict=True):
+        assert re.fullmatch(part, piece), (part, piece)
+    return "".join(pieces) + sample(["", "\n"])
+
+
+def _re2_children(text: pa.Array) -> list[pa.Array]:
+    ext = list(pc.extract_regex(text, pattern=ALB_NAMED_PATTERN).flatten())
+    ext[-1] = pc.if_else(pc.equal(ext[-1], ""), pa.scalar(None, pa.string()), ext[-1])
+    return ext
+
+
+@settings(max_examples=300, derandomize=True, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+@given(lines=st.lists(adversarial_alb_line(), min_size=1, max_size=4))
+def test_span_extraction_equals_re2_captures(lines):
+    pad = [g[0] for g in ALB_GOLDENS[:2]]
+    text = pa.array(pad + lines + pad).slice(len(pad), len(lines))  # offset > 0
+    assert text.offset > 0
+    assert pc.all(pc.match_substring_regex(text, pattern=ALB_NAMED_PATTERN)).as_py()
+    got, want = alb_children(text), _re2_children(text)
+    for name, g, w in zip(ALB_FIELDS, got, want, strict=True):
+        assert g.to_pylist() == w.to_pylist(), name
 
 
 # ---------------------------------------------------------------------------
