@@ -36,16 +36,13 @@ from elb_pipeline.dialects import (
     SINK_CLASSIC,
     SINK_MALFORMED,
 )
-from elb_pipeline.deadletter import with_diagnosis
 from elb_pipeline.enrich import enrich
 from elb_pipeline.parse import (
+    ALB_COLS,
+    CLB_COLS,
     alb_field,
     classic_field,
-    routed_dialect_json,
-    routed_filter,
-    routed_json_both,
-    routed_struct,
-    with_sink,
+    parse_view,
 )
 from elb_pipeline.synth import transcripts_cached, transcripts_from_events
 
@@ -57,7 +54,7 @@ from elb_pipeline.synth import transcripts_cached, transcripts_from_events
 def _routed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """transcripts (materialized once per sf_dir) → routed (sink column
     only — field extraction is deferred to the queries that read fields)."""
-    return with_sink(transcripts_cached(spark, sf_dir))
+    return parse_view(transcripts_cached(spark, sf_dir))
 
 
 def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -91,34 +88,34 @@ def q_parse_route_counts(spark, sf_dir):
     # passthrough=[]: only the sink column crosses back from the Arrow
     # stage (guide §4.1 — the unread transcript columns and the text
     # dominated the return hop's Arrow→UnsafeRow conversion)
-    return sink_counts(
-        with_sink(transcripts_cached(spark, sf_dir), passthrough=[])
-    )
+    return sink_counts(parse_view(transcripts_cached(spark, sf_dir), []))
 
 
 def q_route_sets(spark, sf_dir):
-    return with_sink(
-        transcripts_cached(spark, sf_dir), passthrough=["conv_id", "turn_idx"]
+    return parse_view(
+        transcripts_cached(spark, sf_dir), ["conv_id", "turn_idx"]
     ).select("sink", "conv_id", "turn_idx")
 
 
 def q_parse_alb_fields(spark, sf_dir):
-    # fused route+filter+extract: one Arrow pass (extraction doubles as
-    # the validity test), text never crosses back — replaces the
-    # with_sink → JVM filter → with_dialect_struct chain (two passes)
-    df = routed_struct(
+    # route + filter + extract in one Arrow pass: the capture-free ALB
+    # match decides validity, fields are cut by span from the kept rows,
+    # and the text never crosses back
+    df = parse_view(
         transcripts_cached(spark, sf_dir),
-        SINK_ALB,
-        passthrough=["conv_id", "turn_idx"],
+        ["conv_id", "turn_idx"],
+        keep=(SINK_ALB,),
+        emit=ALB_COLS,
     )
     return df.select("conv_id", "turn_idx", *[alb_field(f) for f in ALB_FIELDS])
 
 
 def q_parse_classic_fields(spark, sf_dir):
-    df = routed_struct(
+    df = parse_view(
         transcripts_cached(spark, sf_dir),
-        SINK_CLASSIC,
-        passthrough=["conv_id", "turn_idx"],
+        ["conv_id", "turn_idx"],
+        keep=(SINK_CLASSIC,),
+        emit=CLB_COLS,
     )
     return df.select(
         "conv_id", "turn_idx", *[classic_field(f) for f in CLASSIC_FIELDS]
@@ -134,12 +131,12 @@ def q_latency_percentiles(spark, sf_dir):
     float compare is stable. At scale this is one partial-aggregable
     shuffle on a low-cardinality key."""
     # fused one-pass extract of exactly the two consumed fields — the
-    # other 31 capture groups never cross the Python→JVM boundary
-    df = routed_struct(
+    # other 31 never cross the Python→JVM boundary
+    df = parse_view(
         transcripts_cached(spark, sf_dir),
-        SINK_ALB,
-        passthrough=[],
-        fields=["elb_status_code", "target_processing_time"],
+        [],
+        keep=(SINK_ALB,),
+        emit=("alb_elb_status_code", "alb_target_processing_time"),
     )
     t = alb_field("target_processing_time").cast("double")
     g = (
@@ -162,8 +159,8 @@ def q_url_domain_topk(spark, sf_dir):
     (host = scheme://<host-no-slash-colon>), deterministic tiebreak on
     domain so the limit boundary is engine-stable. TakeOrderedAndProject
     top-k — no global sort."""
-    df = routed_struct(
-        transcripts_cached(spark, sf_dir), SINK_ALB, passthrough=[], fields=["url"]
+    df = parse_view(
+        transcripts_cached(spark, sf_dir), [], keep=(SINK_ALB,), emit=("alb_url",)
     )
     dom = F.regexp_extract(alb_field("url"), r"^[a-z]+://([^/:]+)", 1)
     return (
@@ -180,26 +177,26 @@ def q_alb_json_lines(spark, sf_dir):
     # fused route+extract+NDJSON in one Arrow pass (byte parity with the
     # JVM to_json path is golden-vector- and oracle-asserted); only
     # (conv_id, turn_idx, json) cross back
-    return routed_dialect_json(
+    return parse_view(
         transcripts_cached(spark, sf_dir),
-        SINK_ALB,
-        passthrough=["conv_id", "turn_idx"],
+        ["conv_id", "turn_idx"],
+        keep=(SINK_ALB,),
+        emit=("json",),
     )
 
 
 def q_classic_json_lines(spark, sf_dir):
-    return routed_dialect_json(
+    return parse_view(
         transcripts_cached(spark, sf_dir),
-        SINK_CLASSIC,
-        passthrough=["conv_id", "turn_idx"],
+        ["conv_id", "turn_idx"],
+        keep=(SINK_CLASSIC,),
+        emit=("json",),
     )
 
 
 def q_enrich_rollup(spark, sf_dir):
     df = enrich(
-        with_sink(
-            transcripts_cached(spark, sf_dir), passthrough=["role", "tool"]
-        ),
+        parse_view(transcripts_cached(spark, sf_dir), ["role", "tool"]),
         spark,
     )
     return df.groupBy("sink", "role_group", "tool_family").agg(
@@ -212,16 +209,13 @@ def q_enrich_rollup(spark, sf_dir):
 def q_agg_sink_day_bucket(spark, sf_dir):
     # ts_day as ISO string so the cross-engine comparison is type-unambiguous
     return sink_day_bucket_counts(
-        with_sink(transcripts_cached(spark, sf_dir), passthrough=["conv_id", "ts"])
+        parse_view(transcripts_cached(spark, sf_dir), ["conv_id", "ts"])
     ).withColumn("ts_day", F.col("ts_day").cast("string"))
 
 
 def q_agg_salted(spark, sf_dir):
     return salted_sink_day_bucket_counts(
-        with_sink(
-            transcripts_cached(spark, sf_dir),
-            passthrough=["conv_id", "turn_idx", "ts"],
-        )
+        parse_view(transcripts_cached(spark, sf_dir), ["conv_id", "turn_idx", "ts"])
     ).withColumn("ts_day", F.col("ts_day").cast("string"))
 
 
@@ -239,9 +233,11 @@ def q_turn_order_check(spark, sf_dir):
 def q_dead_letter_rows(spark, sf_dir):
     # filter INSIDE the Arrow batch: only the malformed minority's rows
     # (and text) ever cross back to the JVM
-    return routed_filter(
-        transcripts_cached(spark, sf_dir).select("conv_id", "turn_idx", "text"),
-        SINK_MALFORMED,
+    return parse_view(
+        transcripts_cached(spark, sf_dir),
+        ["conv_id", "turn_idx", "text"],
+        keep=(SINK_MALFORMED,),
+        emit=(),
     )
 
 
@@ -249,15 +245,14 @@ def q_dead_letter_diag(spark, sf_dir):
     """Vectorized failed-field diagnostics. nearest_dialect + fields_ok are
     oracle-checked (DuckDB recomputes the cumulative prefix predicates);
     the byte-exact failed_position (reference parse.rs:22-41 semantics) is
-    covered by tests/test_deadletter.py against a linear DFA-alive walk."""
-    df = routed_filter(
-        transcripts_cached(spark, sf_dir).select("conv_id", "turn_idx", "text"),
-        SINK_MALFORMED,
-    )
-    # positions=False: this query projects only nearest_dialect/fields_ok,
-    # so the per-row byte-exact bisection would be computed and discarded
-    return with_diagnosis(df, positions=False).select(
-        "conv_id", "turn_idx", "nearest_dialect", "fields_ok"
+    covered by tests/test_deadletter.py against a linear DFA-alive walk.
+    One pass routes, keeps the malformed rows and diagnoses them; without
+    failed_position in ``emit`` the per-row byte bisection never runs."""
+    return parse_view(
+        transcripts_cached(spark, sf_dir),
+        ["conv_id", "turn_idx"],
+        keep=(SINK_MALFORMED,),
+        emit=("nearest_dialect", "fields_ok"),
     )
 
 
@@ -1168,16 +1163,14 @@ def q_ndjson_ordered_lines(spark, sf_dir):
 
 def _both_json_lines(spark, sf_dir):
     """(conv_id, turn_idx, json) for BOTH valid dialects from ONE fused
-    Arrow pass (routed_json_both) — the union of the two per-dialect
-    queries routed and extracted the same text twice (two Python-worker
-    waves; ~2.5× the regex work)."""
-    both = routed_json_both(
+    Arrow pass — the union of the two per-dialect queries routed and
+    extracted the same text twice (two Python-worker waves; ~2.5× the
+    regex work)."""
+    return parse_view(
         transcripts_cached(spark, sf_dir),
-        keep_malformed_text=False,
-        passthrough=["conv_id", "turn_idx"],
-    )
-    return both.where(F.col("sink") != SINK_MALFORMED).select(
-        "conv_id", "turn_idx", "json"
+        ["conv_id", "turn_idx"],
+        keep=(SINK_ALB, SINK_CLASSIC),
+        emit=("json",),
     )
 
 

@@ -116,7 +116,7 @@ def run_pipeline(input_path: str, cpus: int, n_execs: int = 0) -> dict:
 
     from elb_pipeline.aggregate import conv_bucket
     from elb_pipeline.enrich import enrich
-    from elb_pipeline.parse import routed_json_both
+    from elb_pipeline.parse import parse_view
     from elb_pipeline.session import get_spark, perf_conf
 
     conf: dict[str, str]
@@ -172,9 +172,8 @@ def run_pipeline(input_path: str, cpus: int, n_execs: int = 0) -> dict:
         enriched frame. (JSON output is reduced to sum(length) instead of
         written to disk so the measurement is compute-bound; the raw text
         column never crosses back to the JVM.)"""
-        routed = routed_json_both(
-            frame, keep_malformed_text=False,
-            passthrough=["conv_id", "role", "tool", "ts"],
+        routed = parse_view(
+            frame, ["conv_id", "role", "tool", "ts"], emit=("sink", "json")
         )
         enriched = enrich(routed, spark).withColumn("ts_day", F.to_date("ts"))
         out = (
@@ -320,7 +319,7 @@ def kernel_scaling(n_rows: int = 100_000, procs=(1, 8, 32)) -> dict:
     per-executor work unit. On a real cluster, N → 4N EXECUTORS adds
     independent machines; this models that more faithfully than
     thread-scaling inside one shared-memory JVM."""
-    from elb_pipeline.bench_kernel import parse_kernel_rate
+    from bench_kernel import parse_kernel_rate
 
     out = {}
     for p in procs:
@@ -339,7 +338,7 @@ def cpu_probe(procs=(8, 32)) -> dict:
     """Hardware-contention control: pure-CPU busy-loop scaling. Anything
     below 1.0 here is the box (virtualization steal + shared caches), not
     the pipeline."""
-    from elb_pipeline.bench_kernel import cpu_probe_rate
+    from bench_kernel import cpu_probe_rate
 
     out = {}
     for p in procs:
@@ -372,7 +371,7 @@ def deadletter_bench(n_rows: int, rounds: int = SUBBENCH_ROUNDS) -> dict:
     converges on steady state."""
     from pyspark.sql import functions as F
 
-    from elb_pipeline.parse import routed_json_both
+    from elb_pipeline.parse import DIAG_COLS, parse_view
     from elb_pipeline.session import get_spark
     from elb_pipeline.synth import synth_transcripts
 
@@ -386,7 +385,8 @@ def deadletter_bench(n_rows: int, rounds: int = SUBBENCH_ROUNDS) -> dict:
         # fresh frame per action: re-collecting the SAME DataFrame
         # reuses its already-materialized shuffle map stages, which
         # times only the final reduce (measured: 2M rows in 46 ms)
-        routed = routed_json_both(df, with_diag=True, diag_positions=positions)
+        diag = [c for c in DIAG_COLS if positions or c != "failed_position"]
+        routed = parse_view(df, emit=("sink", "json", "mal_text", *diag))
         return routed.groupBy("sink").agg(
             F.count("*").alias("n"), F.sum("fields_ok").alias("fk")
         )

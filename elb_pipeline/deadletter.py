@@ -4,7 +4,8 @@ The reference walks a dense DFA byte-by-byte and reports the index of the
 first byte at which the line can no longer lead to any match
 (``try_find_failed_position``, parse.rs:22-41; rendered to stderr with an
 underline, main.rs:230-245). Two-level reproduction here, both vectorized
-enough to run inside the fused Arrow parse stage:
+enough to run inside the Arrow parse operator (``parse.parse_view``, on
+its malformed rows only, when a diagnosis column is emitted):
 
 1. ``fields_ok`` — how many leading *fields* of each dialect's grammar are
    well-formed. Computed with a **vectorized binary search** over the
@@ -39,8 +40,6 @@ import pyarrow.compute as pc
 import regex as _regex
 
 from elb_pipeline.dialects import ALB, CLASSIC, Dialect
-
-DIAG_FIELDS = ["nearest_dialect", "fields_ok", "failed_position"]
 
 _PARTIAL_CACHE: dict[str, "_regex.Pattern[bytes]"] = {}
 _PREFIX_CACHE: dict[tuple[str, int], str] = {}
@@ -232,40 +231,3 @@ def diagnose_arrow(text: pa.Array, positions: bool = True) -> list[pa.Array]:
         pc.if_else(vmask, pa.array(pos), pa.scalar(None, pa.int32())),
     ]
 
-
-def with_diagnosis(df, text_col: str = "text", positions: bool = True):
-    """Append (nearest_dialect, fields_ok, failed_position) to a frame of
-    (presumed malformed) lines — standalone variant of the diagnosis that
-    ``parse.routed_json_both(with_diag=True)`` fuses into the hot path.
-
-    ``positions=False`` skips the per-row byte-exact bisection and emits a
-    null ``failed_position`` column (same passthrough as the fused path's
-    ``diag_positions`` gate) — use it whenever the consumer only needs
-    nearest_dialect/fields_ok, otherwise the most expensive diagnosis step
-    runs for a column that is immediately discarded."""
-    from collections.abc import Iterator
-
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [
-            T.StructField("nearest_dialect", T.StringType(), True),
-            T.StructField("fields_ok", T.IntegerType(), True),
-            T.StructField("failed_position", T.IntegerType(), True),
-        ]
-    )
-
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            idx = batch.schema.get_field_index(text_col)
-            text = batch.column(idx)
-            if isinstance(text, pa.ChunkedArray):
-                text = text.combine_chunks()
-            diag = diagnose_arrow(text.cast(pa.string()), positions=positions)
-            yield pa.RecordBatch.from_arrays(
-                [*batch.columns, *diag],
-                names=[*batch.schema.names, *DIAG_FIELDS],
-            )
-
-    return df.mapInArrow(gen, out_schema)

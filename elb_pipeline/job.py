@@ -24,7 +24,7 @@ Scale design (the parts the reference cannot express):
   table is bucket-partitioned by conv_id, making each group's scan prune
   to its own files; in local tests the filter is evaluated post-scan.
 - within a group the data is read ONCE and crosses the Python boundary
-  ONCE: a single fused Arrow operator (parse.routed_json_both) routes,
+  ONCE: a single fused Arrow operator (parse.parse_view) routes,
   extracts, serializes NDJSON, and diagnoses dead letters, and all three
   sinks land in one dynamic-partition write (``partitionBy(sink,
   ts_day)``). No persist: caching the routed frame measured pathological
@@ -51,7 +51,7 @@ from elb_pipeline import checkpoint
 from elb_pipeline.aggregate import conv_bucket
 from elb_pipeline.dialects import SINK_ALB, SINK_CLASSIC, SINK_MALFORMED
 from elb_pipeline.enrich import enrich
-from elb_pipeline.parse import routed_json_both
+from elb_pipeline.parse import DIAG_COLS, parse_view
 
 
 class StrictModeError(RuntimeError):
@@ -227,12 +227,14 @@ def _run_group(
     # fans all three sinks out by (sink, ts_day). No persist: caching the
     # routed frame measured pathological at scale (Spark's columnar cache
     # builder crawls on wide text columns).
-    routed = routed_json_both(
+    diag = [c for c in DIAG_COLS if diag_positions or c != "failed_position"]
+    routed = parse_view(
         rows,
-        with_diag=True,
+        emit=("sink", "json", "mal_text", *diag),
         fail_fast=(mode == "strict-fast"),
-        diag_positions=diag_positions,
     )
+    if not diag_positions:
+        routed = routed.withColumn("failed_position", F.lit(None).cast("int"))
     out = (
         enrich(routed, spark)
         .withColumn("ts_day", F.to_date("ts"))

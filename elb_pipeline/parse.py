@@ -1,48 +1,30 @@
-"""Vectorized parse + route stage (pure-Arrow: RE2 match, then spans).
+"""Vectorized parse + route stage: ONE pure-Arrow operator, ``parse_view``.
 
 The reference parses row-at-a-time with a compiled linear-time regex and
-reused capture buffers (alb.rs:199-243, classic_lb.rs:109-139). The
-Spark-native equivalent here is a family of **pure-Arrow** ``mapInArrow``
-operators — zero Python objects per row, field values living in Arrow
-buffers end to end. They work match-then-span:
+reused capture buffers (alb.rs:199-243, classic_lb.rs:109-139), one parser
+per dialect feeding one route (main.rs:194-245). The Spark-native
+equivalent here is a single ``mapInArrow`` operator — zero Python objects
+per row, field values living in Arrow buffers end to end — whose callers
+differ only in which sinks' rows they ``keep`` and which columns they
+``emit``. It works match-then-span:
 
-- validity is a capture-free anchored match under pyarrow's C++ RE2 (its
-  DFA path; RE2 is the same linear-time engine family as Rust's
+- ALB validity is a capture-free anchored match under pyarrow's C++ RE2
+  (its DFA path; RE2 is the same linear-time engine family as Rust's
   ``regex``);
 - ALB fields are then cut from the matching rows' UTF-8 buffer by a
   vectorized delimiter tokenizer (:mod:`elb_pipeline.albspan`), the
   analog of the reference's struct of borrowed byte slices. Asking RE2
   for the 33 capture groups would drop it to its NFA at ~20× the cost;
-- Classic fields come from one 18-group RE2 extract over the non-ALB
-  rows, which is also their validity test (cheap on the non-ALB rows).
+- Classic validity is tested on the non-ALB rows only: one 18-group RE2
+  extract when Classic fields or JSON are emitted (it is also their
+  validity test), a plain match otherwise;
+- dead-letter diagnosis (:mod:`elb_pipeline.deadletter`) runs on the
+  malformed rows only, and only when a diagnosis column is emitted.
 
-``parse_arrow_text`` / ``with_parsed`` keep the full RE2 capture
-extraction as the test reference.
-
-Operator split — measured on a 32-CPU host (8M rows, local[32]), before
-ALB fields were cut by span:
-
-================================  ==========  =============================
-operator                          wall (8M)    use
-================================  ==========  =============================
-``with_sink``                       ~3 s      routing only (match, no
-                                              captures → RE2 DFA path)
-``with_dialect_struct``            ~11 s      per-sink field extraction,
-                                              applied post-filter so each
-                                              row is extracted once
-``with_parsed`` (52-col struct)    ~68 s      full both-dialect struct;
-                                              golden tests / wide queries
-================================  ==========  =============================
-
-The split matters because Catalyst cannot column-prune through a Python
-map operator: whatever the UDF emits is materialized into JVM rows. A
-pipeline that only routes/aggregates must not pay for 52 string columns
-per row — so routing emits one column, and extraction is deferred to the
-sink writes where the fields are genuinely consumed.
-
-A pandas implementation (``parse_route_batch`` / ``with_parsed_pandas``)
-is kept as the engine-independent reference: tests assert the Arrow path
-is byte-identical to it, and both match the reference's golden vectors.
+The declared ``emit`` list matters because Catalyst cannot column-prune
+through a Python map operator: whatever the operator emits is materialized
+into JVM rows. A pipeline that only routes/aggregates emits one column;
+the raw text crosses back only when the caller passes it through.
 
 All fields stay strings with "-"/"-1" sentinels verbatim, exactly like
 the reference (it never converts types — README.md:28).
@@ -50,10 +32,9 @@ the reference (it never converts types — README.md:28).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Iterator, Sequence
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
@@ -61,33 +42,24 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from elb_pipeline.albspan import alb_children
+from elb_pipeline.deadletter import diagnose_arrow
 from elb_pipeline.dialects import (
-    ALB,
     ALB_FIELDS,
     ALB_NAMED_PATTERN,
-    CLASSIC,
     CLASSIC_FIELDS,
     CLASSIC_NAMED_PATTERN,
     SINK_ALB,
     SINK_CLASSIC,
     SINK_MALFORMED,
 )
+from elb_pipeline.jsonout import arrow_ndjson
 
+TEXT_COL = "text"
+ALL_SINKS = (SINK_ALB, SINK_CLASSIC, SINK_MALFORMED)
 ALB_COLS = [f"alb_{f}" for f in ALB_FIELDS]
 CLB_COLS = [f"clb_{f}" for f in CLASSIC_FIELDS]
-PARSED_FIELDS = ["sink", *ALB_COLS, *CLB_COLS]
-PARSED_SCHEMA = T.StructType(
-    [T.StructField(name, T.StringType(), True) for name in PARSED_FIELDS]
-)
-ALB_STRUCT_SCHEMA = T.StructType(
-    [T.StructField(name, T.StringType(), True) for name in ALB_COLS]
-)
-CLB_STRUCT_SCHEMA = T.StructType(
-    [T.StructField(name, T.StringType(), True) for name in CLB_COLS]
-)
-
-_NULL_STR = pa.scalar(None, pa.string())
-
+DIAG_COLS = ["nearest_dialect", "fields_ok", "failed_position"]
+EMITTABLE = ["sink", "json", "mal_text", *DIAG_COLS, *ALB_COLS, *CLB_COLS]
 
 class ParseAbort(RuntimeError):
     """Raised inside the fused operator in fail-fast mode on the first
@@ -166,9 +138,13 @@ def _dict_unique(text: pa.Array) -> tuple[pa.Array | None, pa.Array]:
     return enc.indices, uniq
 
 
-# ---------------------------------------------------------------------------
-# routing — match-only (RE2 DFA, no capture extraction)
-# ---------------------------------------------------------------------------
+def _scatter(kept: pa.Array, mask: pa.BooleanArray) -> pa.Array:
+    """Scatter ``kept`` (len == mask.sum()) back to full length, null where
+    mask is false. take() with null indices is the Arrow-native scatter."""
+    m = pc.fill_null(mask, False).to_numpy(zero_copy_only=False)
+    pos = np.cumsum(m) - 1
+    idx = pa.array(np.where(m, pos, 0), pa.int64(), mask=~m)
+    return kept.take(idx)
 
 
 def _alb_match(text: pa.Array) -> pa.Array:
@@ -179,613 +155,225 @@ def _alb_match(text: pa.Array) -> pa.Array:
     )
 
 
-def _route_sink_unique(text: pa.Array) -> pa.Array:
+# ---------------------------------------------------------------------------
+# the kernel: one batch of lines → keep mask + emitted columns
+# ---------------------------------------------------------------------------
+
+
+def _parse_unique(
+    text: pa.Array, keep: tuple[str, ...], emit: tuple[str, ...], fail_fast: bool
+) -> tuple[pa.Array | None, pa.Array | None, dict[str, pa.Array]]:
+    """(keep mask, malformed mask, emitted columns) aligned to ``text`` —
+    the per-distinct-line body of :func:`parse_batch`. Each step runs only
+    when ``keep``/``emit``/``fail_fast`` need it; the malformed mask is None
+    when no Classic test was needed."""
+    n = len(text)
+    want = set(emit)
+    json = "json" in want
+    alb_in, clb_in = SINK_ALB in keep, SINK_CLASSIC in keep
+    alb_want = [c for c in emit if c in ALB_COLS]
+    clb_want = [c for c in emit if c in CLB_COLS]
+    clb_extract = clb_in and (json or bool(clb_want))
     alb_ok = _alb_match(text)
-    clb_ok = pc.fill_null(
-        pc.match_substring_regex(text, pattern=CLASSIC_NAMED_PATTERN), False
-    )
-    return pc.if_else(
-        alb_ok,
-        pa.scalar(SINK_ALB),
-        pc.if_else(clb_ok, pa.scalar(SINK_CLASSIC), pa.scalar(SINK_MALFORMED)),
-    )
+    cols: dict[str, pa.Array] = {}
+
+    mal = None
+    if (
+        clb_extract
+        or fail_fast
+        or want & {"sink", "mal_text", *DIAG_COLS}
+        or clb_in != (SINK_MALFORMED in keep)
+    ):
+        rest = pc.invert(alb_ok)
+        if clb_extract:
+            clb_ext = pc.extract_regex(
+                text.filter(rest), pattern=CLASSIC_NAMED_PATTERN
+            )
+            ok_rest = pc.is_valid(clb_ext)
+        else:
+            ok_rest = pc.fill_null(
+                pc.match_substring_regex(
+                    text.filter(rest), pattern=CLASSIC_NAMED_PATTERN
+                ),
+                False,
+            )
+        clb_ok = pc.fill_null(_scatter(ok_rest, rest), False)
+        mal = pc.invert(pc.or_(alb_ok, clb_ok))
+        cols["sink"] = pc.if_else(
+            alb_ok,
+            pa.scalar(SINK_ALB),
+            pc.if_else(clb_ok, pa.scalar(SINK_CLASSIC), pa.scalar(SINK_MALFORMED)),
+        )
+
+    if set(keep) == set(ALL_SINKS):
+        keep_mask = None
+    elif mal is None:  # keep is (alb,) or (classic_lb, malformed)
+        keep_mask = alb_ok if alb_in else pc.invert(alb_ok)
+    else:
+        by_sink = {SINK_ALB: alb_ok, SINK_CLASSIC: clb_ok, SINK_MALFORMED: mal}
+        keep_mask = by_sink[keep[0]]
+        for s in keep[1:]:
+            keep_mask = pc.or_(keep_mask, by_sink[s])
+
+    # dead letters first: diagnosis temporaries are freed before the field
+    # and JSON arrays below are built, which lowers a batch's peak memory
+    nulls = pa.nulls(n, pa.string())
+    if "mal_text" in want:
+        # a null ARRAY, not a null scalar: pyarrow's if_else with a scalar
+        # null writes invalid offsets when ``text`` is a slice
+        cols["mal_text"] = pc.if_else(mal, text, nulls)
+    if want & set(DIAG_COLS):
+        diag = diagnose_arrow(text.filter(mal), positions="failed_position" in want)
+        for c, arr in zip(DIAG_COLS, diag):
+            if c in want:
+                cols[c] = _scatter(arr, mal)
+
+    # fields and JSON only for the dialects whose rows are kept
+    if alb_in and (json or alb_want):
+        alb = alb_children(text.filter(alb_ok))
+    for c in alb_want:
+        cols[c] = _scatter(alb[ALB_COLS.index(c)], alb_ok) if alb_in else nulls
+    if clb_in and clb_want:
+        clb_fields = clb_ext.flatten()  # null on non-Classic rows
+    for c in clb_want:
+        cols[c] = _scatter(clb_fields[CLB_COLS.index(c)], rest) if clb_in else nulls
+    if json:
+        js = nulls
+        if alb_in and pc.any(alb_ok).as_py():
+            alb_js = arrow_ndjson(list(ALB_FIELDS), alb, optional_last=True)
+            js = pc.if_else(alb_ok, _scatter(alb_js, alb_ok), js)
+        if clb_extract and pc.any(ok_rest).as_py():
+            kept = clb_ext.filter(ok_rest)
+            clb_js = arrow_ndjson(list(CLASSIC_FIELDS), list(kept.flatten()))
+            js = pc.if_else(clb_ok, _scatter(clb_js, clb_ok), js)
+        cols["json"] = js
+    return keep_mask, mal, cols
 
 
-def route_sink_arrow(text: pa.Array) -> pa.Array:
-    """sink array for one Arrow string array — 'alb'|'classic_lb'|'malformed'.
+def parse_batch(
+    text: pa.Array,
+    keep: Sequence[str] = ALL_SINKS,
+    emit: Sequence[str] = ("sink",),
+    fail_fast: bool = False,
+) -> tuple[pa.Array | None, list[pa.Array]]:
+    """The operator's per-batch kernel: ``(mask, columns)`` where ``mask``
+    marks the rows routed to a sink in ``keep`` (None when every sink is
+    kept; never null) and ``columns`` are the ``emit`` columns of those
+    rows, in ``emit`` order.
 
-    Uses capture-free matching (RE2's fast path). Precedence mirrors the
-    reference's per-dialect dispatch; the grammars are anchored and
-    disjoint, so the second match rejects ALB rows at the first byte.
-    Null text → 'malformed'. Repeated lines in a batch are routed once
-    (_dict_unique hash-consing).
-    """
+    Repeated lines are parsed ONCE per batch (:func:`_dict_unique`) and
+    the results taken back to every row; null lines route to malformed
+    with null fields. ``fail_fast`` raises :class:`ParseAbort` on the
+    batch's first malformed line."""
+    keep, emit = tuple(keep), tuple(emit)
     text = _as_string_array(text)
     idx, uniq = _dict_unique(text)
-    sink = _route_sink_unique(uniq)
+    keep_u, mal_u, cols = _parse_unique(uniq, keep, emit, fail_fast)
+    if fail_fast:
+        mal = mal_u if idx is None else pc.fill_null(mal_u.take(idx), True)
+        if pc.any(mal).as_py():
+            # reference strict semantics: abort at the FIRST malformed
+            # line mid-stream (main.rs:194-203), with the reference's
+            # error text (parse.rs:8). Earlier batches' output may
+            # already be emitted — exactly like the CLI, which has
+            # already written parsed lines to stdout when it aborts.
+            first = text.filter(mal)[0].as_py()
+            raise ParseAbort(f"{PARSE_ABORT_SENTINEL}Invalid log line: {first}")
+    out = [cols[c] for c in emit]
     if idx is None:
-        return sink
-    return pc.fill_null(sink.take(idx), pa.scalar(SINK_MALFORMED))
-
-
-def with_sink(
-    df: DataFrame,
-    text_col: str = "text",
-    passthrough: list[str] | None = None,
-) -> DataFrame:
-    """Add only the ``sink`` routing column (the cheap path — use this for
-    anything that doesn't read extracted fields).
-
-    ``passthrough`` (guide §4.1: pass only the columns the function needs,
-    both ways): select exactly those columns + ``text_col`` BEFORE the
-    Python map — Catalyst cannot prune through it — and emit only
-    ``passthrough + [sink]``, so the text bytes never cross BACK to the
-    JVM for consumers that don't read them (measured: the text column
-    dominates the Arrow→UnsafeRow conversion on the return hop)."""
-    if passthrough is None:
-        src = df
-        keep = [f.name for f in df.schema.fields]
-        keep_idx = list(range(len(df.schema.fields)))
-        text_idx = df.columns.index(text_col)
-        out_fields = list(df.schema.fields)
-    else:
-        src = df.select(*passthrough, text_col)
-        keep = list(passthrough)
-        keep_idx = list(range(len(passthrough)))
-        text_idx = len(passthrough)
-        out_fields = [src.schema[c] for c in passthrough]
-    out_schema = T.StructType(
-        out_fields + [T.StructField("sink", T.StringType(), True)]
-    )
-    names = [*keep, "sink"]
-
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        _pin_worker_pools()
-        for batch in batches:
-            sink = route_sink_arrow(batch.column(text_idx))
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(i) for i in keep_idx] + [sink], names=names
-            )
-
-    return src.mapInArrow(gen, out_schema)
-
-
-# ---------------------------------------------------------------------------
-# fused route + filter (+ extract + NDJSON) — the sink hot path
-# ---------------------------------------------------------------------------
-
-
-def _sink_mask_unique(text: pa.Array, sink: str) -> pa.Array:
-    alb_ok = _alb_match(text)
-    if sink == SINK_ALB:
-        return alb_ok
-    clb_ok = pc.fill_null(
-        pc.match_substring_regex(text, pattern=CLASSIC_NAMED_PATTERN), False
-    )
-    if sink == SINK_CLASSIC:
-        return pc.and_(clb_ok, pc.invert(alb_ok))
-    return pc.invert(pc.or_(alb_ok, clb_ok))
-
-
-def _sink_mask(text: pa.Array, sink: str) -> pa.Array:
-    idx, uniq = _dict_unique(text)
-    mask = _sink_mask_unique(uniq, sink)
-    if idx is None:
-        return mask
-    # null text routes to malformed: its scattered mask slot is null
-    return pc.fill_null(mask.take(idx), sink == SINK_MALFORMED)
-
-
-def routed_filter(df: DataFrame, sink: str, text_col: str = "text") -> DataFrame:
-    """Keep only the rows routing to ``sink`` — filtering happens INSIDE the
-    Arrow batch, so non-matching rows never cross back to the JVM."""
-
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        _pin_worker_pools()
-        for batch in batches:
-            idx = batch.schema.get_field_index(text_col)
-            mask = _sink_mask(_as_string_array(batch.column(idx)), sink)
-            yield batch.filter(mask)
-
-    return df.mapInArrow(gen, df.schema)
-
-
-def routed_struct(
-    df: DataFrame,
-    dialect: str,
-    passthrough: list[str],
-    fields: list[str] | None = None,
-    text_col: str = "text",
-) -> DataFrame:
-    """Fused route → keep only ``dialect`` rows → extract fields, in ONE
-    Arrow pass: replaces the with_sink → JVM filter → with_dialect_struct
-    chain (two Python-worker waves, with the text and every other column
-    crossing back to the JVM between them) for queries that read parsed
-    fields. Emits ``passthrough + parsed`` where ``parsed`` holds the
-    dialect's ``fields`` (default: all) — the text never crosses back,
-    and queries that read 1-2 fields (latency_percentiles,
-    url_domain_topk) cross exactly those instead of all 33."""
-    if dialect == SINK_ALB:
-        all_names, prefix = ALB_FIELDS, "alb_"
-    elif dialect == SINK_CLASSIC:
-        all_names, prefix = CLASSIC_FIELDS, "clb_"
-    else:
-        raise ValueError(f"no extractable fields for dialect {dialect!r}")
-    fields = list(fields) if fields is not None else list(all_names)
-    pick = [all_names.index(f) for f in fields]
-    struct_names = [f"{prefix}{f}" for f in fields]
-    struct_schema = T.StructType(
-        [T.StructField(n, T.StringType(), True) for n in struct_names]
-    )
-    src = df.select(*passthrough, text_col)
-    n_pass = len(passthrough)
-    out_schema = T.StructType(
-        [src.schema[c] for c in passthrough]
-        + [T.StructField("parsed", struct_schema, True)]
-    )
-    names = [*passthrough, "parsed"]
-
-    extract = (
-        _alb_children_valid if dialect == SINK_ALB else _extract_clb_children
-    )
-
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        _pin_worker_pools()
-        for batch in batches:
-            # capture-free match decides validity (RE2's DFA path); field
-            # spans are then cut once per DISTINCT kept line (_dict_unique
-            # inside the extract helper)
-            text = _as_string_array(batch.column(n_pass))
-            mask = _sink_mask(text, dialect)
-            kept = batch.filter(mask)
-            children = extract(_as_string_array(kept.column(n_pass)))
-            parsed = pa.StructArray.from_arrays(
-                [children[i] for i in pick], names=struct_names
-            )
-            yield pa.RecordBatch.from_arrays(
-                [*kept.columns[:n_pass], parsed], names=names
-            )
-
-    return src.mapInArrow(gen, out_schema)
-
-
-def routed_dialect_json(
-    df: DataFrame,
-    dialect: str,
-    text_col: str = "text",
-    passthrough: list[str] | None = None,
-) -> DataFrame:
-    """The fused sink operator: route → keep only ``dialect`` rows → extract
-    fields → assemble the reference-exact NDJSON line — all inside one Arrow
-    pass, emitting the input columns + one ``json`` string column.
-
-    This is the hot path for sink writes: compared to chaining a routing
-    map, a JVM filter, a 33-column struct crossing, and JVM ``to_json``,
-    only the final JSON string crosses the Python↔JVM boundary (measured
-    ~5× faster end-to-end at 32 cores on 8M rows).
-
-    ``passthrough``: select exactly those columns + text before the map
-    and emit ``passthrough + [json]`` — the text does not cross back
-    (guide §4.1). Validity comes from a capture-free match over every row
-    (_sink_mask); fields are then extracted from the kept rows only — by
-    span for ALB (:func:`albspan.alb_children`), by RE2 extract for
-    Classic.
-    """
-    from elb_pipeline.jsonout import arrow_ndjson
-
-    if dialect == SINK_ALB:
-        fields, optional_last = ALB_FIELDS, True
-    elif dialect == SINK_CLASSIC:
-        fields, optional_last = CLASSIC_FIELDS, False
-    else:
-        raise ValueError(f"no JSON output for dialect {dialect!r}")
-
-    if passthrough is None:
-        src = df
-        n_keep = len(df.columns)
-        keep_cols = list(range(n_keep))
-        text_idx = df.columns.index(text_col)
-        out_fields = list(df.schema.fields)
-        names = [*df.columns, "json"]
-    else:
-        src = df.select(*passthrough, text_col)
-        n_keep = len(passthrough)
-        keep_cols = list(range(n_keep))
-        text_idx = n_keep
-        out_fields = [src.schema[c] for c in passthrough]
-        names = [*passthrough, "json"]
-    out_schema = T.StructType(
-        out_fields + [T.StructField("json", T.StringType(), True)]
-    )
-
-    extract_u = alb_children if dialect == SINK_ALB else _extract_clb_children_u
-
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        _pin_worker_pools()
-        for batch in batches:
-            # match decides validity (capture-free DFA), then extraction
-            # AND serialization run once per DISTINCT kept line — the
-            # assembled JSON is scattered back with one take()
-            text = _as_string_array(batch.column(text_idx))
-            mask = _sink_mask(text, dialect)
-            kept = batch.filter(mask)
-            if kept.num_rows == 0:
-                js = pa.array([], pa.string())
-            else:
-                ktext = _as_string_array(kept.column(text_idx))
-                idx, uniq = _dict_unique(ktext)
-                js = arrow_ndjson(
-                    list(fields), extract_u(uniq), optional_last=optional_last
-                )
-                if idx is not None:
-                    js = js.take(idx)
-            yield pa.RecordBatch.from_arrays(
-                [kept.column(i) for i in keep_cols] + [js], names=names
-            )
-
-    return src.mapInArrow(gen, out_schema)
-
-
-# ---------------------------------------------------------------------------
-# fused BOTH-dialect route + extract + NDJSON — ONE Arrow pass, one stage
-# ---------------------------------------------------------------------------
-
-
-def _scatter(kept: pa.Array, mask: pa.BooleanArray) -> pa.Array:
-    """Scatter ``kept`` (len == mask.sum()) back to full length, null where
-    mask is false. take() with null indices is the Arrow-native scatter."""
-    m = pc.fill_null(mask, False).to_numpy(zero_copy_only=False)
-    pos = np.cumsum(m) - 1
-    idx = pa.array(np.where(m, pos, 0), pa.int64(), mask=~m)
-    return kept.take(idx)
-
-
-def _route_json_unique(text: pa.Array) -> tuple[pa.Array, pa.Array]:
-    """(sink, json) aligned to ``text`` — the per-distinct-line body of
-    :func:`route_json_arrow`.
-
-    Work per line: one capture-free ALB MATCH over every row (RE2's DFA
-    path), which is the only ALB validity test; field spans cut from the
-    matching rows' UTF-8 buffer (:func:`albspan.alb_children` — no RE2
-    captures); one 18-group Classic extract over only the non-ALB
-    remainder (extraction doubles as the validity test there); and
-    C++-side NDJSON assembly on the matching subsets. json is null for
-    malformed rows."""
-    from elb_pipeline.jsonout import arrow_ndjson
-
-    n = len(text)
-    alb_ok = _alb_match(text)
-    rest_mask = pc.invert(alb_ok)
-
-    text_rest = text.filter(rest_mask)
-    clb_ext_rest = pc.extract_regex(text_rest, pattern=CLASSIC_NAMED_PATTERN)
-    clb_ok_rest = pc.is_valid(clb_ext_rest)
-    clb_ok = (
-        pc.fill_null(_scatter(clb_ok_rest, rest_mask), False)
-        if n
-        else pa.array([], pa.bool_())
-    )
-
-    sink = pc.if_else(
-        alb_ok,
-        pa.scalar(SINK_ALB),
-        pc.if_else(clb_ok, pa.scalar(SINK_CLASSIC), pa.scalar(SINK_MALFORMED)),
-    )
-
-    json_col = pa.nulls(n, pa.string())
-    if pc.any(alb_ok).as_py():
-        children = alb_children(text.filter(alb_ok))
-        js = arrow_ndjson(list(ALB_FIELDS), children, optional_last=True)
-        json_col = pc.if_else(alb_ok, _scatter(js, alb_ok), json_col)
-    if pc.any(clb_ok_rest).as_py():
-        kept = clb_ext_rest.filter(clb_ok_rest)
-        js = arrow_ndjson(list(CLASSIC_FIELDS), list(kept.flatten()))
-        json_col = pc.if_else(clb_ok, _scatter(js, clb_ok), json_col)
-    return sink, json_col
+        mask = keep_u
+        if mask is not None:
+            out = [c.filter(mask) for c in out]
+        return mask, out
+    mask = None
+    if keep_u is not None:
+        mask = pc.fill_null(keep_u.take(idx), SINK_MALFORMED in keep)
+        idx = idx.filter(mask)
+    out = [c.take(idx) for c in out]
+    if "sink" in emit:  # null lines: null index → malformed
+        i = emit.index("sink")
+        out[i] = pc.fill_null(out[i], pa.scalar(SINK_MALFORMED))
+    return mask, out
 
 
 def route_json_arrow(text: pa.Array) -> tuple[pa.Array, pa.Array]:
-    """(sink, json) for one Arrow string array, both dialects, one pass.
-
-    Repeated lines are parsed ONCE per batch (_dict_unique hash-consing —
-    route/extract/serialize are pure per-line functions); per-distinct
-    work is _route_json_unique. json is null for malformed rows."""
-    text = _as_string_array(text)
-    idx, uniq = _dict_unique(text)
-    sink, json_col = _route_json_unique(uniq)
-    if idx is None:
-        return sink, json_col
-    return (
-        pc.fill_null(sink.take(idx), pa.scalar(SINK_MALFORMED)),
-        json_col.take(idx),
-    )
+    """(sink, json) for one Arrow string array, both dialects, one pass —
+    the ``run_job`` kernel without its dead-letter columns. json is null
+    for malformed rows."""
+    return tuple(parse_batch(text, emit=("sink", "json"))[1])
 
 
-def routed_json_both(
+def parse_view(
     df: DataFrame,
-    text_col: str = "text",
-    keep_malformed_text: bool = True,
-    passthrough: list[str] | None = None,
-    with_diag: bool = False,
-    diag_positions: bool = True,
+    passthrough: Sequence[str] | None = None,
+    *,
+    keep: Sequence[str] = ALL_SINKS,
+    emit: Sequence[str] = ("sink",),
     fail_fast: bool = False,
 ) -> DataFrame:
-    """THE pipeline hot path: one ``mapInArrow`` stage that routes every
-    line, extracts+serializes both valid dialects, and emits
-    ``(passthrough..., sink, json, mal_text)`` — the raw ``text`` column
-    does NOT cross back to the JVM except for the malformed minority
-    (``mal_text``, for the dead-letter sink; null for valid rows).
+    """Route every ``text`` line, keep the rows of the sinks in ``keep``
+    (filtered INSIDE the Arrow batch, so other rows never cross back to the
+    JVM) and emit ``passthrough + emit`` — one ``mapInArrow`` stage.
 
-    ``with_diag`` additionally emits the dead-letter diagnosis columns
-    (nearest_dialect, fields_ok, failed_position — deadletter.py), computed
-    inside the same pass on ONLY the malformed rows (the reference's
-    error fast-path asymmetry: diagnosis work scales with the dead-letter
-    rate, not the input, alb.rs:199-203 / main.rs:230-245).
+    ``passthrough`` (default: every column but ``text``) is selected
+    BEFORE the Python map — Catalyst cannot prune through it — so the scan
+    reads only those columns plus ``text``; the text itself crosses back
+    only when listed there. ``emit`` names the computed columns:
 
-    Replaces the round-1 three-stage shape (with_sink + 2×
-    routed_dialect_json): one Python-worker wave instead of three, and
-    ~2.5× less regex work per line.
-    """
-    cols = passthrough if passthrough is not None else [
-        c for c in df.columns if c != text_col
-    ]
-    src = df.select(*cols, text_col)
-    out_fields = [src.schema[c] for c in cols] + [
-        T.StructField("sink", T.StringType(), False),
-        T.StructField("json", T.StringType(), True),
-        T.StructField("mal_text", T.StringType(), True),
-    ]
-    names = [*cols, "sink", "json", "mal_text"]
-    if with_diag:
-        out_fields += [
-            T.StructField("nearest_dialect", T.StringType(), True),
-            T.StructField("fields_ok", T.IntegerType(), True),
-            T.StructField("failed_position", T.IntegerType(), True),
-        ]
-        names += ["nearest_dialect", "fields_ok", "failed_position"]
+    - ``sink``: 'alb' | 'classic_lb' | 'malformed' (null text → malformed);
+    - ``json``: the reference-exact NDJSON line (null when malformed);
+    - ``mal_text``: the raw line for malformed rows, else null;
+    - ``nearest_dialect``, ``fields_ok``, ``failed_position``: dead-letter
+      diagnosis (deadletter.py), computed on ONLY the malformed rows — the
+      reference's error fast-path asymmetry (alb.rs:199-203); the per-row
+      byte bisection runs only when ``failed_position`` is emitted;
+    - ``alb_<field>`` / ``clb_<field>``: one parsed field, null on rows of
+      any other sink (read them with :func:`alb_field` /
+      :func:`classic_field`).
 
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        _pin_worker_pools()
-        for batch in batches:
-            text = _as_string_array(batch.column(len(cols)))
-            sink, json_col = route_json_arrow(text)
-            mal_mask = pc.equal(sink, pa.scalar(SINK_MALFORMED))
-            if fail_fast and pc.any(mal_mask).as_py():
-                # reference strict semantics: abort at the FIRST malformed
-                # line mid-stream (main.rs:194-203), with the reference's
-                # error text (parse.rs:8). Earlier batches' output may
-                # already be emitted — exactly like the CLI, which has
-                # already written parsed lines to stdout when it aborts.
-                first = text.filter(mal_mask)[0].as_py()
-                raise ParseAbort(
-                    f"{PARSE_ABORT_SENTINEL}Invalid log line: {first}"
-                )
-            if keep_malformed_text:
-                mal = pc.if_else(mal_mask, text, _NULL_STR)
-            else:
-                mal = pa.nulls(len(text), pa.string())
-            extra: list[pa.Array] = []
-            if with_diag:
-                from elb_pipeline.deadletter import diagnose_arrow
-
-                kept = text.filter(mal_mask)
-                if len(kept):
-                    extra = [
-                        _scatter(c, mal_mask)
-                        for c in diagnose_arrow(kept, positions=diag_positions)
-                    ]
-                else:
-                    extra = [
-                        pa.nulls(len(text), pa.string()),
-                        pa.nulls(len(text), pa.int32()),
-                        pa.nulls(len(text), pa.int32()),
-                    ]
-            yield pa.RecordBatch.from_arrays(
-                [*batch.columns[: len(cols)], sink, json_col, mal, *extra],
-                names=names,
-            )
-
-    return src.mapInArrow(gen, T.StructType(out_fields))
-
-
-# ---------------------------------------------------------------------------
-# per-dialect extraction
-# ---------------------------------------------------------------------------
-
-
-def _extract_alb_children_u(text: pa.Array) -> list[pa.Array]:
-    """ALB fields of any lines: match, then spans of the matching rows;
-    every field is null on rows that are not ALB."""
-    ok = _alb_match(text)
-    return [_scatter(c, ok) for c in alb_children(text.filter(ok))]
-
-
-def _extract_clb_children_u(text: pa.Array) -> list[pa.Array]:
-    ext = pc.extract_regex(text, pattern=CLASSIC_NAMED_PATTERN)
-    return [
-        c.cast(pa.string()) if c.type != pa.string() else c for c in ext.flatten()
-    ]
-
-
-def _hash_consed(extract_u):
-    """Run ``extract_u`` once per distinct line (_dict_unique) and scatter
-    its field arrays back to every row."""
-
-    def extract(text: pa.Array) -> list[pa.Array]:
-        idx, uniq = _dict_unique(text)
-        children = extract_u(uniq)
-        if idx is None:
-            return children
-        return [c.take(idx) for c in children]
-
-    return extract
-
-
-_extract_alb_children = _hash_consed(_extract_alb_children_u)
-_extract_clb_children = _hash_consed(_extract_clb_children_u)
-_alb_children_valid = _hash_consed(alb_children)
-
-
-def with_dialect_struct(
-    df: DataFrame, dialect: str, text_col: str = "text"
-) -> DataFrame:
-    """Add ``parsed`` struct holding ONE dialect's fields (alb_* or clb_*).
-
-    Intended for rows already routed to that sink (each row is then
-    extracted exactly once across the whole pipeline). Rows that don't
-    match simply get null fields. ``jsonout.alb_json/classic_json`` read
-    ``parsed.alb_*`` / ``parsed.clb_*`` and work with either this struct
-    or the full one from :func:`with_parsed`.
-    """
-    if dialect == SINK_ALB:
-        struct_schema, names, extract = ALB_STRUCT_SCHEMA, ALB_COLS, _extract_alb_children
-    elif dialect == SINK_CLASSIC:
-        struct_schema, names, extract = CLB_STRUCT_SCHEMA, CLB_COLS, _extract_clb_children
-    else:
-        raise ValueError(f"no extractable fields for dialect {dialect!r}")
-
+    ``fail_fast`` aborts the task at the first malformed line
+    (:class:`ParseAbort`)."""
+    keep, emit = tuple(keep), tuple(emit)
+    if not keep or not set(keep) <= set(ALL_SINKS):
+        raise ValueError(f"keep must be a non-empty subset of {ALL_SINKS}: {keep}")
+    unknown = [c for c in emit if c not in EMITTABLE]
+    if unknown:
+        raise ValueError(f"cannot emit {unknown}")
+    cols = (
+        [c for c in df.columns if c != TEXT_COL]
+        if passthrough is None
+        else list(passthrough)
+    )
+    src = df.select(*cols) if TEXT_COL in cols else df.select(*cols, TEXT_COL)
+    text_idx = src.columns.index(TEXT_COL)
+    n_pass = len(cols)
+    int_cols = {"fields_ok", "failed_position"}
     out_schema = T.StructType(
-        list(df.schema.fields) + [T.StructField("parsed", struct_schema, True)]
-    )
-
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        _pin_worker_pools()
-        for batch in batches:
-            idx = batch.schema.get_field_index(text_col)
-            children = extract(_as_string_array(batch.column(idx)))
-            parsed = pa.StructArray.from_arrays(children, names=names)
-            yield pa.RecordBatch.from_arrays(
-                [*batch.columns, parsed], names=[*batch.schema.names, "parsed"]
-            )
-
-    return df.mapInArrow(gen, out_schema)
-
-
-# ---------------------------------------------------------------------------
-# full both-dialect struct (golden tests, wide queries)
-# ---------------------------------------------------------------------------
-
-
-def parse_arrow_text(text: pa.Array) -> tuple[pa.Array, pa.StructArray]:
-    """(sink, full 52-field parsed struct) for one Arrow string array."""
-    text = _as_string_array(text)
-    alb = pc.extract_regex(text, pattern=ALB_NAMED_PATTERN)
-    clb = pc.extract_regex(text, pattern=CLASSIC_NAMED_PATTERN)
-    alb_ok = pc.is_valid(alb)
-    clb_ok = pc.and_(pc.is_valid(clb), pc.invert(alb_ok))
-
-    sink = pc.if_else(
-        alb_ok,
-        pa.scalar(SINK_ALB),
-        pc.if_else(clb_ok, pa.scalar(SINK_CLASSIC), pa.scalar(SINK_MALFORMED)),
-    )
-
-    alb_children = list(alb.flatten())
-    tid_i = len(ALB_FIELDS) - 1
-    alb_children[tid_i] = pc.if_else(
-        pc.equal(alb_children[tid_i], pa.scalar("")), _NULL_STR, alb_children[tid_i]
-    )
-    # enforce routing precedence on the classic side (disjoint grammars,
-    # but null-out classic fields for rows already routed to alb)
-    clb_children = [pc.if_else(alb_ok, _NULL_STR, c) for c in clb.flatten()]
-
-    children = [sink, *alb_children, *clb_children]
-    children = [
-        c.cast(pa.string()) if c.type != pa.string() else c for c in children
-    ]
-    return sink, pa.StructArray.from_arrays(children, names=PARSED_FIELDS)
-
-
-def with_parsed(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Add full ``parsed`` struct (both dialects) + top-level ``sink``."""
-    out_schema = T.StructType(
-        list(df.schema.fields)
+        [src.schema[c] for c in cols]
         + [
-            T.StructField("parsed", PARSED_SCHEMA, True),
-            T.StructField("sink", T.StringType(), True),
+            T.StructField(
+                c, T.IntegerType() if c in int_cols else T.StringType(), c != "sink"
+            )
+            for c in emit
         ]
     )
+    names = [*cols, *emit]
 
     def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         _pin_worker_pools()
         for batch in batches:
-            idx = batch.schema.get_field_index(text_col)
-            sink, parsed = parse_arrow_text(batch.column(idx))
-            yield pa.RecordBatch.from_arrays(
-                [*batch.columns, parsed, sink],
-                names=[*batch.schema.names, "parsed", "sink"],
-            )
+            mask, out = parse_batch(batch.column(text_idx), keep, emit, fail_fast)
+            passed = batch.columns[:n_pass]
+            if mask is not None:
+                passed = [c.filter(mask) for c in passed]
+            yield pa.RecordBatch.from_arrays([*passed, *out], names=names)
 
-    return df.mapInArrow(gen, out_schema)
-
-
-# ---------------------------------------------------------------------------
-# pandas path (engine-independent reference implementation)
-# ---------------------------------------------------------------------------
-
-_N_ALB = len(ALB_FIELDS)
-_N_CLB = len(CLASSIC_FIELDS)
-_N_COLS = 1 + _N_ALB + _N_CLB
-_ALB_SLICE = slice(1, 1 + _N_ALB)
-_CLB_SLICE = slice(1 + _N_ALB, _N_COLS)
-
-
-def parse_route_batch(text: pd.Series) -> pd.DataFrame:
-    """Parse + route one batch with Python ``re`` (pure pandas).
-
-    ``rx.match(...).groups()`` in a tight loop measures ~20× faster than
-    ``Series.str.extract`` for these 33-group patterns, but per-row
-    PyObject churn collapses under full-machine parallelism (57k →
-    18k rows/s/core at 32 workers); kept as the reference implementation
-    the Arrow path is asserted against, and for pandas-level unit tests.
-    """
-    # fullmatch, not match: Python's $ also matches before a trailing
-    # newline — fullmatch keeps the Python path byte-agreeing with RE2
-    # (Arrow path, DuckDB oracle) on "line\n\n" inputs.
-    alb_match = ALB.regex.fullmatch
-    clb_match = CLASSIC.regex.fullmatch
-    n = len(text)
-    sinks = np.empty(n, dtype=object)
-    alb_pos: list[int] = []
-    alb_groups: list[tuple] = []
-    clb_pos: list[int] = []
-    clb_groups: list[tuple] = []
-    for i, x in enumerate(text):
-        m = alb_match(x) if isinstance(x, str) else None
-        if m is not None:
-            sinks[i] = SINK_ALB
-            alb_pos.append(i)
-            alb_groups.append(m.groups())
-            continue
-        m = clb_match(x) if isinstance(x, str) else None
-        if m is not None:
-            sinks[i] = SINK_CLASSIC
-            clb_pos.append(i)
-            clb_groups.append(m.groups())
-        else:
-            sinks[i] = SINK_MALFORMED
-    arr = np.full((n, _N_COLS), None, dtype=object)
-    arr[:, 0] = sinks
-    if alb_pos:
-        arr[np.asarray(alb_pos), _ALB_SLICE] = np.array(alb_groups, dtype=object)
-    if clb_pos:
-        arr[np.asarray(clb_pos), _CLB_SLICE] = np.array(clb_groups, dtype=object)
-    return pd.DataFrame(arr, columns=PARSED_FIELDS, index=text.index)
-
-
-_parse_udf = F.pandas_udf(parse_route_batch, PARSED_SCHEMA)
-
-
-def with_parsed_pandas(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """pandas-UDF variant of :func:`with_parsed` (for benchmarks/tests)."""
-    return df.withColumn("parsed", _parse_udf(F.col(text_col))).withColumn(
-        "sink", F.col("parsed.sink")
-    )
+    return src.mapInArrow(gen, out_schema)
 
 
 def alb_field(name: str) -> Column:
-    return F.col(f"parsed.alb_{name}").alias(name)
+    return F.col(f"alb_{name}").alias(name)
 
 
 def classic_field(name: str) -> Column:
-    return F.col(f"parsed.clb_{name}").alias(name)
+    return F.col(f"clb_{name}").alias(name)

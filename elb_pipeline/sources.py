@@ -158,13 +158,13 @@ def corpus_fixture(root: str) -> str:
 def corpus_route_counts(spark: SparkSession, root: str) -> DataFrame:
     """(corpus, sink, n) over both dialect-scoped corpora — the reference's
     two per-dialect CLI runs expressed as one DataFrame."""
-    from elb_pipeline.parse import with_sink
+    from elb_pipeline.parse import parse_view
 
     parts = []
     for corpus, dialect in (("alb_gz", ALB), ("classic_plain", CLASSIC)):
         df = read_log_corpus(spark, root, dialect)
         parts.append(
-            with_sink(df.select("text"))
+            parse_view(df, passthrough=[])
             .groupBy("sink")
             .agg(F.count("*").alias("n"))
             .select(F.lit(corpus).alias("corpus"), "sink", "n")

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from elb_pipeline.enrich import enrich
-from elb_pipeline.parse import with_sink
+from elb_pipeline.parse import DIAG_COLS, parse_view
 
 TRANSCRIPTS_DDL = (
     "conv_id string, turn_idx int, role string, text string, "
@@ -42,7 +42,7 @@ def read_transcripts_stream(
 
 def routed_stream(spark: SparkSession, stream: DataFrame) -> DataFrame:
     """Stateless parse→route→enrich over a streaming DataFrame."""
-    return enrich(with_sink(stream), spark)
+    return enrich(parse_view(stream), spark)
 
 
 def windowed_sink_counts(
@@ -70,9 +70,7 @@ def routed_json_stream(spark: SparkSession, stream: DataFrame) -> DataFrame:
     operator runs on a streaming frame unchanged — this is the streaming
     analog of the reference's stdin→stdout mode (main.rs:89-101), emitting
     one NDJSON line per valid turn as micro-batches arrive."""
-    from elb_pipeline.parse import routed_json_both
-
-    return routed_json_both(stream, with_diag=True)
+    return parse_view(stream, emit=("sink", "json", "mal_text", *DIAG_COLS))
 
 
 def dedup_stream(

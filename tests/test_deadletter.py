@@ -86,19 +86,27 @@ def test_diagnose_arrow_shape_and_tiebreak():
     assert pos[2].as_py() == len("h2 2024-05-28T13:34:14.804475Z")
 
 
-def test_with_diagnosis_positions_gate(spark):
-    """positions=False skips the per-row bisection: same nearest_dialect/
-    fields_ok columns, failed_position all-null (VERDICT r3 #3 — the
-    oracled diag query must not compute byte positions it discards)."""
-    from elb_pipeline.deadletter import with_diagnosis
+def test_parse_view_positions_gate(spark):
+    """Leaving failed_position out of ``emit`` skips the per-row bisection:
+    same nearest_dialect/fields_ok columns, no failed_position column
+    (VERDICT r3 #3 — the oracled diag query must not compute byte
+    positions it discards)."""
+    from elb_pipeline.dialects import SINK_MALFORMED
+    from elb_pipeline.parse import DIAG_COLS, parse_view
 
     df = spark.createDataFrame(
         [("garbage",), ("h2 2024-05-28T13:34:14.804475Z",)], "text string"
     )
-    fast = with_diagnosis(df, positions=False).collect()
-    full = with_diagnosis(df, positions=True).collect()
-    assert all(r["failed_position"] is None for r in fast)
+
+    def diag(emit):
+        return parse_view(df, ["text"], keep=(SINK_MALFORMED,), emit=emit)
+
+    fast = diag(DIAG_COLS[:2])
+    full = diag(DIAG_COLS).collect()
+    assert "failed_position" not in fast.columns
+    fast = fast.collect()
     assert {(r["text"], r["nearest_dialect"], r["fields_ok"]) for r in fast} == {
         (r["text"], r["nearest_dialect"], r["fields_ok"]) for r in full
     }
+    assert len(fast) == 2
     assert any(r["failed_position"] is not None for r in full)

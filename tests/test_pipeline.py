@@ -13,10 +13,16 @@ from pyspark.sql import functions as F
 from elb_pipeline import checkpoint
 from elb_pipeline.dialects import parse_line
 from elb_pipeline.job import StrictModeError, run_job
-from elb_pipeline.parse import with_parsed, with_parsed_pandas, with_sink
+from elb_pipeline.parse import ALB_COLS, CLB_COLS, parse_view
 from elb_pipeline.synth import transcripts_from_events
+from tests.reference_parse import with_parsed, with_parsed_pandas
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+def _routed(t):
+    """Every input column, text included, plus ``sink``."""
+    return parse_view(t, t.columns)
 
 
 @pytest.fixture(scope="module")
@@ -38,7 +44,7 @@ def oracle_rows(transcripts):
 def test_routed_row_sets_match_oracle(spark, transcripts, oracle_rows):
     got = {
         (r["conv_id"], r["turn_idx"], r["sink"])
-        for r in with_sink(transcripts).select("conv_id", "turn_idx", "sink").collect()
+        for r in _routed(transcripts).select("conv_id", "turn_idx", "sink").collect()
     }
     want = {(c, t, s) for c, t, s, _ in oracle_rows}
     assert got == want
@@ -47,7 +53,7 @@ def test_routed_row_sets_match_oracle(spark, transcripts, oracle_rows):
 def test_sink_counts_match_oracle(spark, transcripts, oracle_rows):
     got = {
         r["sink"]: r["n"]
-        for r in with_sink(transcripts).groupBy("sink").agg(F.count("*").alias("n")).collect()
+        for r in _routed(transcripts).groupBy("sink").agg(F.count("*").alias("n")).collect()
     }
     want = collections.Counter(s for _, _, s, _ in oracle_rows)
     assert got == dict(want)
@@ -123,7 +129,7 @@ def test_ndjson_export_matches_parquet_json(spark, transcripts, tmp_path):
 def test_job_all_malformed_input_survives_skip_mode(spark, transcripts, tmp_path):
     """A group whose valid slice is empty must not crash the read-back
     (dynamic-partition writes of empty frames emit no part files)."""
-    mal_only = with_sink(transcripts).where(F.col("sink") == "malformed").drop("sink")
+    mal_only = _routed(transcripts).where(F.col("sink") == "malformed").drop("sink")
     res = run_job(spark, mal_only, str(tmp_path / "malonly"), mode="skip", n_groups=2)
     assert res.sink_counts["alb"] == 0 and res.sink_counts["classic_lb"] == 0
     assert res.sink_counts["malformed"] == mal_only.count()
@@ -151,7 +157,7 @@ def test_strict_fast_mode_aborts_with_reference_error(spark, transcripts, tmp_pa
     (parse.rs:8, main.rs:194-203)."""
     malformed_texts = {
         r["text"]
-        for r in with_sink(transcripts).where(F.col("sink") == "malformed")
+        for r in _routed(transcripts).where(F.col("sink") == "malformed")
         .select("text").collect()
     }
     with pytest.raises(StrictModeError, match="Invalid log line: ") as exc:
@@ -165,44 +171,50 @@ def test_strict_fast_mode_aborts_with_reference_error(spark, transcripts, tmp_pa
 
 
 def test_strict_fast_clean_input_passes(spark, transcripts, tmp_path):
-    clean = with_sink(transcripts).where(F.col("sink") != "malformed").drop("sink")
+    clean = _routed(transcripts).where(F.col("sink") != "malformed").drop("sink")
     res = run_job(spark, clean, str(tmp_path / "sfc"), mode="strict-fast", n_groups=1)
     assert res.sink_counts["malformed"] == 0
     assert res.sink_counts["alb"] > 0
 
 
 def test_strict_mode_clean_input_passes(spark, transcripts, tmp_path):
-    clean = with_sink(transcripts).where(F.col("sink") != "malformed").drop("sink")
+    clean = _routed(transcripts).where(F.col("sink") != "malformed").drop("sink")
     res = run_job(spark, clean, str(tmp_path / "clean"), mode="strict", n_groups=1)
     assert res.sink_counts["malformed"] == 0
     assert res.sink_counts["alb"] > 0
 
 
 def test_parse_paths_equivalent(spark, transcripts):
-    """The three parse implementations (Arrow match-only routing, Arrow
-    full-struct extraction, pandas/``re`` UDF) must agree row-for-row."""
+    """The three parse implementations (the production ``parse_view``
+    operator, Arrow RE2 full-struct extraction, pandas/``re`` UDF) must
+    agree row-for-row: sinks, and every ALB and Classic field."""
     key = ["conv_id", "turn_idx"]
     a = {tuple(r[k] for k in key): r["sink"]
-         for r in with_sink(transcripts).select(*key, "sink").collect()}
+         for r in parse_view(transcripts).select(*key, "sink").collect()}
     b = {tuple(r[k] for k in key): r["sink"]
          for r in with_parsed(transcripts).select(*key, "sink").collect()}
     c = {tuple(r[k] for k in key): r["sink"]
          for r in with_parsed_pandas(transcripts).select(*key, "sink").collect()}
     assert a == b == c
 
-    # and full-struct field values: arrow vs pandas
-    cols = ["parsed.alb_url", "parsed.alb_tid", "parsed.clb_http_version"]
-    b2 = {tuple(r[k] for k in key): tuple(r[i] for i in range(2, 5))
+    # and field values: every alb_*/clb_* column of the three paths
+    fields = [*ALB_COLS, *CLB_COLS]
+    cols = [f"parsed.{f}" for f in fields]
+    n = len(key)
+    a2 = {tuple(r[k] for k in key): tuple(r[n:])
+          for r in parse_view(transcripts, key, emit=fields).collect()}
+    b2 = {tuple(r[k] for k in key): tuple(r[n:])
           for r in with_parsed(transcripts).select(*key, *cols).collect()}
-    c2 = {tuple(r[k] for k in key): tuple(r[i] for i in range(2, 5))
+    c2 = {tuple(r[k] for k in key): tuple(r[n:])
           for r in with_parsed_pandas(transcripts).select(*key, *cols).collect()}
-    assert b2 == c2
+    assert a2 == b2 == c2
+    assert len(a2) == len(a)
 
 
 def test_salted_agg_equals_direct(spark, transcripts):
     from elb_pipeline.aggregate import salted_sink_day_bucket_counts, sink_day_bucket_counts
 
-    routed = with_sink(transcripts).withColumn("ts_day", F.to_date("ts"))
+    routed = _routed(transcripts).withColumn("ts_day", F.to_date("ts"))
     direct = {
         (r["sink"], r["conv_bucket"], r["ts_day"]): r["n"]
         for r in sink_day_bucket_counts(routed).collect()

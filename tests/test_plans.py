@@ -4,13 +4,16 @@
 - dimension joins broadcast (never sort-merge-shuffle the fact side)
 - parquet scans prune columns (ReadSchema) and push filters
 - aggregations are partial-first (two HashAggregate levels)
-- the fused Arrow operator receives only the columns it was given
+- the fused Arrow operator receives only the columns it was given, and
+  every parse query runs exactly one Python map over its snapshot scan
 """
 
 from __future__ import annotations
 
 import contextlib
 import io
+import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -58,19 +61,45 @@ def test_aggregates_are_partial_first(spark):
 
 
 def test_fused_operator_input_is_pruned(spark):
-    """routed_json_both selects its passthrough + text BEFORE the Python
-    map, so the parquet scan reads only those columns even though Catalyst
-    cannot prune THROUGH the map operator itself."""
-    from elb_pipeline.parse import routed_json_both
+    """parse_view selects its passthrough + text BEFORE the Python map, so
+    the parquet scan reads only those columns even though Catalyst cannot
+    prune THROUGH the map operator itself."""
+    from elb_pipeline.parse import parse_view
     from elb_pipeline.synth import transcripts_cached
 
     t = transcripts_cached(spark, SF_DIR)
-    routed = routed_json_both(t, passthrough=["conv_id", "ts"])
+    routed = parse_view(t, ["conv_id", "ts"], emit=("sink", "json", "mal_text"))
     p = plan_of(routed.groupBy("sink").count())
     read_schema = p.split("ReadSchema")[1].splitlines()[0]
     assert "text" in read_schema and "conv_id" in read_schema
     for unused in ("role", "tool", "turn_idx"):
         assert unused not in read_schema
+
+
+PARSE_QUERIES = [
+    "agg_salted", "agg_sink_day_bucket", "alb_json_lines",
+    "classic_json_lines", "dead_letter_diag", "dead_letter_rows",
+    "enrich_rollup", "latency_percentiles", "ndjson_ordered_lines",
+    "ndjson_sharded_lines", "parse_alb_fields", "parse_classic_fields",
+    "parse_route_counts", "route_sets", "url_domain_topk",
+]
+_SNAPSHOTS = os.path.join(os.path.dirname(os.path.dirname(__file__)), "plans", "r06")
+
+
+def _read_schema(plan: str) -> str:
+    return re.search(r"ReadSchema: (.*)", plan).group(1)
+
+
+@pytest.mark.parametrize("name", PARSE_QUERIES)
+def test_parse_query_plan_shape(spark, name):
+    """Every parse-family query routes through exactly ONE Python map
+    (MapInArrow) and scans exactly the columns of its recorded plan
+    snapshot (plans/r06/<q>_after.txt)."""
+    p = plan_of(entry_mod.queries()[name](spark, SF_DIR))
+    with open(os.path.join(_SNAPSHOTS, f"{name}_after.txt")) as fh:
+        snapshot = fh.read()
+    assert len(re.findall(r"^\(\d+\) MapInArrow", p, re.M)) == 1, p
+    assert _read_schema(p) == _read_schema(snapshot)
 
 
 def test_sharded_export_has_no_single_partition_exchange(spark):

@@ -5,9 +5,9 @@
   field of a valid line can hold ``"``, ``\\`` or a byte below 0x20; the
   mutation test below inserts those bytes into every other field of every
   golden line.
-- ``with_dialect_struct`` extracts from rows that were never routed, so
+- ``parse_view`` emits a dialect's fields next to rows of every sink, so
   ALB extraction must still give all-null fields for Classic, malformed
-  and null rows.
+  and null rows (and Classic extraction for ALB rows).
 """
 
 from __future__ import annotations
@@ -17,14 +17,7 @@ import pytest
 
 from elb_pipeline.dialects import ALB, CLASSIC, SINK_MALFORMED, parse_line
 from elb_pipeline.goldens import ALB_GOLDENS, CLASSIC_GOLDENS, MALFORMED_GOLDENS
-from elb_pipeline.parse import (
-    ALB_COLS,
-    CLB_COLS,
-    _extract_alb_children,
-    _extract_clb_children,
-    route_sink_arrow,
-    with_dialect_struct,
-)
+from elb_pipeline.parse import ALB_COLS, CLB_COLS, parse_batch, parse_view
 
 _ESCAPE_BYTES = ('"', "\\", "\t")
 
@@ -49,7 +42,7 @@ def test_fields_outside_free_text_reject_escape_bytes(dialect, goldens):
                 for ch in _ESCAPE_BYTES:
                     mutated.append(line[:pos] + ch + line[pos:])
                     where.append(name)
-    sinks = route_sink_arrow(pa.array(mutated)).to_pylist()
+    sinks = parse_batch(pa.array(mutated))[1][0].to_pylist()
     resplit = set()
     for line, sink, name in zip(mutated, sinks, where):
         if sink == SINK_MALFORMED:
@@ -78,11 +71,12 @@ def _expected(text: pa.Array, dialect) -> list[list[str | None]]:
 
 
 @pytest.mark.parametrize(
-    "extract,dialect",
-    [(_extract_alb_children, ALB), (_extract_clb_children, CLASSIC)],
-    ids=["alb", "classic"],
+    "cols,dialect", [(ALB_COLS, ALB), (CLB_COLS, CLASSIC)], ids=["alb", "classic"]
 )
-def test_extract_children_null_on_other_rows(extract, dialect):
+def test_extract_children_null_on_other_rows(cols, dialect):
+    def extract(text):
+        return parse_batch(text, emit=cols)[1]
+
     text = _mixed()
     want = _expected(text, dialect)
     assert [c.to_pylist() for c in extract(text)] == want
@@ -96,10 +90,10 @@ def test_extract_children_null_on_other_rows(extract, dialect):
 
 @pytest.mark.parametrize("dialect,cols", [(ALB, ALB_COLS), (CLASSIC, CLB_COLS)],
                          ids=["alb", "classic"])
-def test_with_dialect_struct_mixed_batch(spark, dialect, cols):
+def test_parse_view_fields_mixed_batch(spark, dialect, cols):
     text = _mixed()
     df = spark.createDataFrame([(i, t) for i, t in enumerate(text.to_pylist())],
                                "id INT, text STRING")
-    rows = with_dialect_struct(df, dialect.name).orderBy("id").collect()
-    got = [[r["parsed"][c] if r["parsed"] else None for r in rows] for c in cols]
+    rows = parse_view(df, emit=cols).orderBy("id").collect()
+    got = [[r[c] for r in rows] for c in cols]
     assert got == _expected(text, dialect)

@@ -33,7 +33,7 @@ def test_streaming_counts_match_batch(spark, tmp_path):
 def test_streaming_fused_json_matches_batch(spark, tmp_path):
     """The fused route+extract+NDJSON+diagnosis operator runs unchanged
     under readStream and emits byte-identical output to the batch path."""
-    from elb_pipeline.parse import routed_json_both
+    from elb_pipeline.parse import DIAG_COLS, parse_view
     from elb_pipeline.streaming import run_json_stream_to_memory
 
     t = transcripts_from_events(spark, SF_DIR)
@@ -41,7 +41,9 @@ def test_streaming_fused_json_matches_batch(spark, tmp_path):
     t.write.mode("overwrite").parquet(path)
 
     streamed = run_json_stream_to_memory(spark, path, query_name="t_json")
-    batch = routed_json_both(spark.read.parquet(path), with_diag=True)
+    batch = parse_view(
+        spark.read.parquet(path), emit=("sink", "json", "mal_text", *DIAG_COLS)
+    )
 
     key = ["conv_id", "turn_idx"]
     cols = key + ["sink", "json", "mal_text", "fields_ok", "failed_position"]
@@ -90,7 +92,7 @@ def test_streaming_checkpoint_resume(spark, tmp_path):
 def test_stateful_sessionization(spark, tmp_path):
     """applyInPandasWithState sessionization: the LAST update emitted per
     conversation must carry the full batch-computed totals."""
-    from elb_pipeline.parse import with_sink
+    from elb_pipeline.parse import parse_view
     from elb_pipeline.streaming import run_sessions_to_memory
 
     t = transcripts_from_events(spark, SF_DIR)
@@ -106,7 +108,7 @@ def test_stateful_sessionization(spark, tmp_path):
             latest[r["conv_id"]] = r
 
     batch = (
-        with_sink(t)
+        parse_view(t)
         .groupBy("conv_id")
         .agg(
             F.count("*").alias("n_turns"),
