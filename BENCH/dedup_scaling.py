@@ -260,7 +260,9 @@ def run_rare_level(spark, k_replicas: int, tag: str = "", series: str = "rare") 
     trigram distribution (see scaled_pool) — per-replica candidate sets,
     global orders, and pair sets are then exactly replica-symmetric, and
     the measured scaling reflects organic-corpus behavior rather than the
-    infix marker's bigram-entropy degradation."""
+    infix marker's bigram-entropy degradation. Both paths read the dedup
+    DAG's shingle rows / sets nodes under a per-level key, so their wall
+    includes building the signature node those nodes derive from."""
     from pyspark.sql import functions as F
 
     from elb_pipeline.dedup import prefix_jaccard_pairs, rare_shingle_pairs
@@ -279,7 +281,7 @@ def run_rare_level(spark, k_replicas: int, tag: str = "", series: str = "rare") 
     n_docs = pool.count()
 
     t0 = time.monotonic()
-    pairs = pair_fn(pool)
+    pairs = pair_fn(pool, f"{series}_k{k_replicas}{tag}")
     rep = (F.col("a_id") / REPLICA_STRIDE).cast("long")
     per_rep = (
         pairs.groupBy(

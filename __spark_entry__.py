@@ -37,6 +37,7 @@ from elb_pipeline.dialects import (
     SINK_MALFORMED,
 )
 from elb_pipeline.enrich import enrich
+from elb_pipeline.matcache import cached, dir_fingerprint
 from elb_pipeline.parse import (
     ALB_COLS,
     CLB_COLS,
@@ -410,50 +411,35 @@ def q_minhash_dup_groups(spark, sf_dir):
 def _doc_cache_key(sf_dir: str) -> str:
     """Cache key for per-sf_dir materialized intermediates: sf tag + a
     content fingerprint of documents.parquet (stale-proof)."""
-    from elb_pipeline.matcache import dir_fingerprint
-
     tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
     return f"{tag}_{dir_fingerprint(f'{sf_dir}/documents.parquet')}"
+
+
+def _doc_pool(spark, sf_dir) -> tuple[DataFrame, str]:
+    """(the dedup DAG's pool node for sf_dir's documents, its cache key);
+    every other node hangs off the pool under the same key."""
+    key = _doc_cache_key(sf_dir)
+    return D.materialized_doc_pool(_read(spark, sf_dir, "documents"), key), key
 
 
 def q_minhash_lsh_pairs(spark, sf_dir):
     """Banded MinHash LSH (4 bands × 2 rows, word-3-gram shingles) over
     doc_pool: candidate pairs from per-band bucket joins, verified with
     exact shingle-set Jaccard — the linear-cost near-dup path for 100 TB
-    (dedup.py). Signatures are materialized to a parquet table (computed
-    once, no persisted RDDs left behind)."""
-    from elb_pipeline.dedup import (
-        materialized_doc_pool,
-        materialized_signatures,
-        materialized_verified_pairs,
-    )
-
-    key = _doc_cache_key(sf_dir)
-    sigs = materialized_signatures(
-        materialized_doc_pool(_read(spark, sf_dir, "documents"), cache_key=key),
-        cache_key=key,
-    )
-    return materialized_verified_pairs(sigs, cache_key=key)
+    (dedup.py). Reads the pool → signatures → verified pairs nodes
+    (each computed once to parquet, no persisted RDDs left behind)."""
+    pool, key = _doc_pool(spark, sf_dir)
+    return D.materialized_verified_pairs(D.materialized_signatures(pool, key), key)
 
 
 def q_minhash_lsh_groups(spark, sf_dir):
     """Duplicate components: connected components over the verified LSH
     pairs via iterative min-label propagation; group_id = min doc_id.
-    dup_groups owns the persist lifecycle of its inputs (pairs/edges are
-    unpersisted once the edge set is materialized)."""
-    from elb_pipeline.dedup import (
-        dup_groups,
-        materialized_doc_pool,
-        materialized_signatures,
-        materialized_verified_pairs,
-    )
-
-    key = _doc_cache_key(sf_dir)
-    sigs = materialized_signatures(
-        materialized_doc_pool(_read(spark, sf_dir, "documents"), cache_key=key),
-        cache_key=key,
-    )
-    return dup_groups(materialized_verified_pairs(sigs, cache_key=key), cache_key=key)
+    Reads the dup_groups node, whose build owns the persist lifecycle of
+    its inputs (everything it persisted is released after the write)."""
+    pool, key = _doc_pool(spark, sf_dir)
+    sigs = D.materialized_signatures(pool, key)
+    return D.dup_groups(D.materialized_verified_pairs(sigs, key), key)
 
 
 def q_leakproof_split(spark, sf_dir):
@@ -471,22 +457,9 @@ def q_leakproof_split(spark, sf_dir):
     through the shared recursive-CTE chain and the same coalesce+hash —
     the straddle-freedom is pytest-asserted with a naive-split negative
     control (tests/test_mixture.py)."""
-    from elb_pipeline.dedup import (
-        dup_groups,
-        materialized_doc_pool,
-        materialized_signatures,
-        materialized_verified_pairs,
-    )
-    from elb_pipeline.mixture import hash_frac
-
-    key = _doc_cache_key(sf_dir)
-    pool = materialized_doc_pool(_read(spark, sf_dir, "documents"), cache_key=key)
-    groups = dup_groups(
-        materialized_verified_pairs(
-            materialized_signatures(pool, cache_key=key), cache_key=key
-        ),
-        cache_key=key,
-    )
+    pool, key = _doc_pool(spark, sf_dir)
+    sigs = D.materialized_signatures(pool, key)
+    groups = D.dup_groups(D.materialized_verified_pairs(sigs, key), key)
     keyed = (
         pool.select("doc_id")
         .join(F.broadcast(groups), "doc_id", "left")
@@ -494,7 +467,7 @@ def q_leakproof_split(spark, sf_dir):
             "doc_id", F.coalesce("group_id", "doc_id").alias("skey")
         )
     )
-    frac = hash_frac(F.col("skey"))
+    frac = M.hash_frac(F.col("skey"))
     split = (
         F.when(frac < 0.8, "train").when(frac < 0.9, "val").otherwise("test")
     )
@@ -511,17 +484,9 @@ def q_dedup_incremental(spark, sf_dir):
     only, so no corpus x corpus work; exact layer is a narrow-key
     semi-join). Reuses the same materialized signature table as the LSH
     queries (production: the corpus signature store is standing state)."""
-    from elb_pipeline.dedup import (
-        EXACT_OFFSET,
-        incremental_dedup,
-        materialized_doc_pool,
-        materialized_signatures,
-    )
-
-    key = _doc_cache_key(sf_dir)
-    pool = materialized_doc_pool(_read(spark, sf_dir, "documents"), cache_key=key)
-    sigs = materialized_signatures(pool, cache_key=key)
-    return incremental_dedup(pool, sigs, EXACT_OFFSET)
+    pool, key = _doc_pool(spark, sf_dir)
+    sigs = D.materialized_signatures(pool, key)
+    return D.incremental_dedup(pool, sigs, D.EXACT_OFFSET)
 
 
 def q_jaccard_rare_pairs(spark, sf_dir):
@@ -534,13 +499,7 @@ def q_jaccard_rare_pairs(spark, sf_dir):
     the known recall gap (dup cliques wider than the cap have no blocking
     key — measured at sf0.001) is documented at dedup.rare_shingle_pairs,
     and the exact-recall prefix-filter variant is jaccard_prefix_pairs."""
-    from elb_pipeline.dedup import materialized_doc_pool, rare_shingle_pairs
-
-    key = _doc_cache_key(sf_dir)
-    return rare_shingle_pairs(
-        materialized_doc_pool(_read(spark, sf_dir, "documents"), cache_key=key),
-        cache_key=key,
-    )
+    return D.rare_shingle_pairs(*_doc_pool(spark, sf_dir))
 
 
 def q_jaccard_prefix_pairs(spark, sf_dir):
@@ -555,13 +514,7 @@ def q_jaccard_prefix_pairs(spark, sf_dir):
     set arrays (dedup.prefix_jaccard_pairs — see the module comment's
     measured scale lesson: the string-array form spilled >65 GB at 233k
     docs on a bigram-entropy corpus)."""
-    from elb_pipeline.dedup import materialized_doc_pool, prefix_jaccard_pairs
-
-    key = _doc_cache_key(sf_dir)
-    return prefix_jaccard_pairs(
-        materialized_doc_pool(_read(spark, sf_dir, "documents"), cache_key=key),
-        cache_key=key,
-    )
+    return D.prefix_jaccard_pairs(*_doc_pool(spark, sf_dir))
 
 
 # BPE-ish token classes: letter runs, digit runs, single punctuation
@@ -835,25 +788,18 @@ def q_simhash_near_dup(spark, sf_dir):
     the candidate set linear at 100 TB; no all-pairs comparison. The
     simhash itself is an Arrow-batched UDF (see dedup.py: the 32-wide
     expression tree falls out of codegen, 119 s → ~1 s), materialized to
-    parquet so the two join sides don't recompute it and no persisted RDD
-    outlives the query."""
-    from elb_pipeline.dedup import materialized_doc_pool, simhash32
-    from elb_pipeline.matcache import materialize
-
+    parquet (the ``simhash32`` node off the pool) so the two join sides
+    don't recompute it and no persisted RDD outlives the query."""
     import inspect
 
-    from elb_pipeline.dedup import _simhash32_batch, algo_params
-
-    pool = materialize(
-        materialized_doc_pool(
-            _read(spark, sf_dir, "documents"), cache_key=_doc_cache_key(sf_dir)
-        ).select(
-            "doc_id", simhash32(F.col("text")).alias("sh")
-        ),
-        f"simhash32_{_doc_cache_key(sf_dir)}",
-        params=algo_params() + (inspect.getsource(_simhash32_batch),),
+    pool, key = _doc_pool(spark, sf_dir)
+    hashed = cached(
+        spark,
+        f"simhash32_{key}",
+        D.algo_params() + (inspect.getsource(D._simhash32_batch),),
+        lambda: pool.select("doc_id", D.simhash32(F.col("text")).alias("sh")),
     )
-    bands = pool.select(
+    bands = hashed.select(
         "doc_id",
         "sh",
         F.explode(
@@ -943,19 +889,11 @@ def q_contamination_check(spark, sf_dir):
     shingles shared with the 'benchmark set' (docs 0-9). At scale the
     benchmark shingle set is small → broadcast join; candidate docs are
     whatever overlaps, no all-pairs work."""
-    from elb_pipeline.dedup import (
-        EXACT_OFFSET,
-        materialized_doc_pool,
-        materialized_shingle_rows,
-    )
-
     # reuse the shared per-doc distinct shingle rows (the base documents
     # are exactly the pool rows below the planted-dup offset) instead of
     # re-exploding the corpus — same (doc_id, s) set by construction
-    key = _doc_cache_key(sf_dir)
-    pool = materialized_doc_pool(_read(spark, sf_dir, "documents"), cache_key=key)
-    shingled = materialized_shingle_rows(pool, key).where(
-        F.col("doc_id") < EXACT_OFFSET
+    shingled = D.materialized_shingle_rows(*_doc_pool(spark, sf_dir)).where(
+        F.col("doc_id") < D.EXACT_OFFSET
     )
     bench = (
         shingled.where(F.col("doc_id") < 10).select("s").distinct()
@@ -991,44 +929,39 @@ def q_training_corpus(spark, sf_dir):
     training_corpus series, VERDICT r4 #7) runs on replica-strided pools,
     so the oracled query and the scaling evidence cannot drift apart.
 
-    The survivor frame is materialized per (sf_dir fingerprint, curation
-    params) — VERDICT r5 #4: ``corpus_sequences`` runs the same five
-    screens in the same sweep, so the second pass reads the survivors
-    table instead of re-curating (the signature/groups tables already
-    work this way)."""
+    The survivor frame is the ``curation_surv`` node per (sf_dir
+    fingerprint, curation params) — VERDICT r5 #4: ``corpus_sequences``
+    runs the same five screens in the same sweep, so the second pass
+    reads the survivors table instead of re-curating."""
     import inspect
 
     from elb_pipeline import curation as C
-    from elb_pipeline.matcache import materialize
 
-    docs = _read(spark, sf_dir, "documents")
-    key = _doc_cache_key(sf_dir)
-    pool = D.materialized_doc_pool(docs, cache_key=key)
-    # both shingle sides come from the shared materialized rows table:
-    # the benchmark side is its doc_id < 10 slice (the base documents ARE
-    # the pool rows below the planted-dup offset), the contamination side
-    # is the full pool rows — no re-shingling in either screen
-    rows = D.materialized_shingle_rows(pool, key)
-    surv = C.training_corpus(
-        pool,
-        rows.where(F.col("doc_id") < C.N_BENCH_DOCS).select("s").distinct(),
-        C.en_base_ids(docs),
-        cache_key=key,
-        pool_shingles=rows,
+    pool, key = _doc_pool(spark, sf_dir)
+
+    def build():
+        # both shingle sides come from the shared materialized rows table:
+        # the benchmark side is its doc_id < 10 slice (the base documents
+        # ARE the pool rows below the planted-dup offset), the
+        # contamination side is the full pool rows — no re-shingling
+        rows = D.materialized_shingle_rows(pool, key)
+        return C.training_corpus(
+            pool,
+            rows.where(F.col("doc_id") < C.N_BENCH_DOCS).select("s").distinct(),
+            C.en_base_ids(_read(spark, sf_dir, "documents")),
+            cache_key=key,
+            pool_shingles=rows,
+        )
+
+    params = (
+        C.MIN_TOKENS,
+        C.MAX_CHARS_PER_TOKEN_X2,
+        C.MIN_STOPWORDS,
+        C.N_BENCH_DOCS,
+        tuple(C.EN_STOPWORDS),
+        inspect.getsource(C.training_corpus),
     )
-    return materialize(
-        surv,
-        f"curation_surv_{_doc_cache_key(sf_dir)}",
-        params=D.algo_params()
-        + (
-            C.MIN_TOKENS,
-            C.MAX_CHARS_PER_TOKEN_X2,
-            C.MIN_STOPWORDS,
-            C.N_BENCH_DOCS,
-            tuple(C.EN_STOPWORDS),
-            inspect.getsource(C.training_corpus),
-        ),
-    )
+    return cached(spark, f"curation_surv_{key}", D.algo_params() + params, build)
 
 
 def q_corpus_sequences(spark, sf_dir):

@@ -23,6 +23,17 @@ Scale notes (100 TB):
   loop of self-joins — Pregel shape). Dup components are tiny (dup
   cliques), so it converges in O(log component-diameter) ≈ 2-3 rounds;
   each round is one shuffle on doc_id.
+
+Cached intermediates (the dedup DAG). Each node is ``matcache.cached``
+under ``<prefix>_<cache_key>`` with ``algo_params()``: read on a hit,
+built, written once and read back on a miss.
+
+- ``doc_pool``        ``materialized_doc_pool(documents, key)``
+- ``minhash_sigs``    ``materialized_signatures(pool, key)``
+- ``verified_pairs``  ``materialized_verified_pairs(sigs, key)``
+- ``dup_groups``      ``dup_groups(pairs, key)``
+- ``shingle_rows``    ``materialized_shingle_rows(pool, key)``  (from sigs)
+- ``shingle_sets``    ``materialized_shingle_sets(pool, key)``  (from sigs)
 """
 
 from __future__ import annotations
@@ -31,6 +42,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from elb_pipeline.matcache import cached
 
 EXACT_MOD = 11
 NEAR_MOD = 13
@@ -65,6 +78,14 @@ def algo_params() -> tuple:
         NEAR_TAIL,
         inspect.getsource(_minhash_batch),
         inspect.getsource(md5vec),
+    )
+
+
+def _node(upstream: DataFrame, prefix: str, cache_key: str, build) -> DataFrame:
+    """The DAG node ``prefix`` for ``cache_key`` (see the module docstring):
+    ``build()`` runs only when the node is not cached yet."""
+    return cached(
+        upstream.sparkSession, f"{prefix}_{cache_key}", algo_params(), build
     )
 
 
@@ -128,16 +149,7 @@ def materialized_doc_pool(documents: DataFrame, cache_key: str) -> DataFrame:
     the pool only exists to synthesize a dup-bearing corpus from the
     dup-free driver fixture, so materializing it mirrors the production
     shape the same way transcripts_cached does for the parse family."""
-    from elb_pipeline.matcache import lookup, materialize
-
-    cached = lookup(
-        documents.sparkSession, f"doc_pool_{cache_key}", params=algo_params()
-    )
-    if cached is not None:
-        return cached
-    return materialize(
-        doc_pool(documents), f"doc_pool_{cache_key}", params=algo_params()
-    )
+    return _node(documents, "doc_pool", cache_key, lambda: doc_pool(documents))
 
 
 def doc_pool_cte() -> str:
@@ -275,22 +287,14 @@ def with_signatures(pool: DataFrame) -> DataFrame:
     )
 
 
-def materialized_signatures(pool: DataFrame, cache_key: str | None = None) -> DataFrame:
+def materialized_signatures(pool: DataFrame, cache_key: str) -> DataFrame:
     """Signatures computed ONCE and materialized — the b band joins and the
     Jaccard verification all reuse this frame, and without materialization
     each branch would re-evaluate the 8 minhash lambda expressions from
-    scratch (measured ~10× recompute, 82 s → ~10 s at sf0.1).
-
-    With ``cache_key`` the frame is written to parquet and read back
-    (matcache.materialize) — the 100-TB shape, and it leaves NO persisted
-    RDDs behind in a long-lived session. Without a key it falls back to
-    ``.persist()``; the caller owns the unpersist."""
-    sigs = with_signatures(pool)
-    if cache_key is not None:
-        from elb_pipeline.matcache import materialize
-
-        return materialize(sigs, f"minhash_sigs_{cache_key}", params=algo_params())
-    return sigs.persist()
+    scratch (measured ~10× recompute, 82 s → ~10 s at sf0.1). Written to
+    parquet and read back — the 100-TB shape, and it leaves NO persisted
+    RDDs behind in a long-lived session."""
+    return _node(pool, "minhash_sigs", cache_key, lambda: with_signatures(pool))
 
 
 def signatures_cte() -> str:
@@ -306,13 +310,20 @@ def signatures_cte() -> str:
     )
 
 
-def _band_key(b: int):
-    cols = [F.col(f"sig{b * ROWS_PER_BAND + r}") for r in range(ROWS_PER_BAND)]
-    return F.md5(F.concat(*cols))
+def _band_rows(sigs: DataFrame) -> DataFrame:
+    """(doc_id, bk): one row per band; prefixing the band key with the band
+    index keeps buckets from different bands distinct."""
+    keys = []
+    for b in range(N_BANDS):
+        cols = [F.col(f"sig{b * ROWS_PER_BAND + r}") for r in range(ROWS_PER_BAND)]
+        keys.append(F.concat(F.lit(f"{b}:"), F.md5(F.concat(*cols))))
+    return sigs.select("doc_id", F.explode(F.array(*keys)).alias("bk"))
 
 
-def _band_key_sql(b: int) -> str:
-    cols = " || ".join(f"sig{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND))
+def _band_key_sql(alias: str, b: int) -> str:
+    cols = " || ".join(
+        f"{alias}.sig{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND)
+    )
     return f"md5({cols})"
 
 
@@ -320,19 +331,11 @@ def lsh_candidate_pairs(sigs: DataFrame) -> DataFrame:
     """Distinct (a_id, b_id) candidate pairs: two docs agreeing on ALL
     rows of at least one band.
 
-    ONE bucket self-join over the exploded (band_idx, band_key) rows —
-    prefixing the key with the band index keeps buckets from different
-    bands distinct, so a single equi-join replaces N_BANDS separate
+    ONE bucket self-join over the exploded (band_idx, band_key) rows
+    (``_band_rows``), so a single equi-join replaces N_BANDS separate
     join+union stages: one shuffle over b·n small rows instead of b
     shuffles (and b fewer scheduler rounds — measured ~2× at sf0.1)."""
-    keyed = sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(*[
-                F.concat(F.lit(f"{b}:"), _band_key(b)) for b in range(N_BANDS)
-            ])
-        ).alias("bk"),
-    )
+    keyed = _band_rows(sigs)
     left = keyed.select(F.col("doc_id").alias("a_id"), "bk")
     right = keyed.select(F.col("doc_id").alias("b_id"), "bk")
     return (
@@ -346,15 +349,9 @@ def lsh_candidate_pairs(sigs: DataFrame) -> DataFrame:
 def lsh_candidates_cte() -> str:
     parts = []
     for b in range(N_BANDS):
-        cols_a = " || ".join(
-            f"a.sig{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND)
-        )
-        cols_b = " || ".join(
-            f"b.sig{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND)
-        )
         parts.append(
             f"SELECT a.doc_id AS a_id, b.doc_id AS b_id FROM sigs a "
-            f"JOIN sigs b ON md5({cols_a}) = md5({cols_b}) "
+            f"JOIN sigs b ON {_band_key_sql('a', b)} = {_band_key_sql('b', b)} "
             "AND a.doc_id < b.doc_id"
         )
     return "cands AS (" + " UNION ".join(parts) + ")"
@@ -362,17 +359,12 @@ def lsh_candidates_cte() -> str:
 
 def verified_pairs(sigs: DataFrame) -> DataFrame:
     """LSH candidates that pass the exact shingle-set Jaccard check."""
-    cands = lsh_candidate_pairs(sigs)
-    a = sigs.select(F.col("doc_id").alias("a_id"), F.col("sh").alias("a_sh"))
-    b = sigs.select(F.col("doc_id").alias("b_id"), F.col("sh").alias("b_sh"))
-    sa = F.array_distinct(F.col("a_sh"))
-    sb = F.array_distinct(F.col("b_sh"))
-    jac = F.size(F.array_intersect(sa, sb)) / F.size(F.array_union(sa, sb))
-    return (
-        cands.join(a, "a_id").join(b, "b_id")
-        .select("a_id", "b_id", F.round(jac, 4).alias("jaccard"))
-        .where(F.col("jaccard") >= JACCARD_THRESHOLD)
-    )
+    return _jaccard_verify(lsh_candidate_pairs(sigs), _string_sets(sigs))
+
+
+def _string_sets(sigs: DataFrame) -> DataFrame:
+    """(doc_id, hs): each doc's distinct shingle strings."""
+    return sigs.select("doc_id", F.array_distinct("sh").alias("hs"))
 
 
 def materialized_verified_pairs(sigs: DataFrame, cache_key: str) -> DataFrame:
@@ -383,11 +375,7 @@ def materialized_verified_pairs(sigs: DataFrame, cache_key: str) -> DataFrame:
     (measured ~1-2 s per consumer at sf0.1). Same lifecycle as the
     signature table: computed once, written as a real parquet table, no
     persisted RDDs left behind."""
-    from elb_pipeline.matcache import materialize
-
-    return materialize(
-        verified_pairs(sigs), f"verified_pairs_{cache_key}", params=algo_params()
-    )
+    return _node(sigs, "verified_pairs", cache_key, lambda: verified_pairs(sigs))
 
 
 def verified_pairs_cte() -> str:
@@ -447,37 +435,24 @@ def incremental_dedup(pool: DataFrame, sigs: DataFrame, split_id: int) -> DataFr
         .select("doc_id", F.lit(True).alias("x_batch"))
     )
 
-    keyed = sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(*[
-                F.concat(F.lit(f"{b}:"), _band_key(b)) for b in range(N_BANDS)
-            ])
-        ).alias("bk"),
-    )
-    index_side = keyed.select(F.col("doc_id").alias("other_id"), "bk")
+    keyed = _band_rows(sigs)
+    index_side = keyed.select(F.col("doc_id").alias("a_id"), "bk")
     probe_side = keyed.where(is_batch).select(F.col("doc_id").alias("b_id"), "bk")
     cands = (
         index_side.join(probe_side, "bk")
         .where(
             # a partner counts if it is corpus, or an earlier batch doc
-            (F.col("other_id") < F.lit(split_id))
-            | (F.col("other_id") < F.col("b_id"))
+            (F.col("a_id") < F.lit(split_id))
+            | (F.col("a_id") < F.col("b_id"))
         )
-        .select("other_id", "b_id")
+        .select("a_id", "b_id")
         .distinct()
     )
-    a = sigs.select(F.col("doc_id").alias("other_id"), F.col("sh").alias("a_sh"))
-    b = sigs.select(F.col("doc_id").alias("b_id"), F.col("sh").alias("b_sh"))
-    sa, sb = F.array_distinct("a_sh"), F.array_distinct("b_sh")
-    jac = F.size(F.array_intersect(sa, sb)) / F.size(F.array_union(sa, sb))
     near = (
-        cands.join(a, "other_id")
-        .join(b, "b_id")
-        .where(F.round(jac, 4) >= JACCARD_THRESHOLD)
+        _jaccard_verify(cands, _string_sets(sigs))
         .groupBy("b_id")
         .agg(
-            F.max((F.col("other_id") < F.lit(split_id)).cast("int")).alias(
+            F.max((F.col("a_id") < F.lit(split_id)).cast("int")).alias(
                 "near_corpus"
             )
         )
@@ -512,15 +487,9 @@ def incremental_dedup_sql(split_id: int) -> str:
     )
     band_joins = []
     for bnd in range(N_BANDS):
-        cols_a = " || ".join(
-            f"a.sig{bnd * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND)
-        )
-        cols_b = " || ".join(
-            f"b.sig{bnd * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND)
-        )
         band_joins.append(
             f"SELECT a.doc_id AS other_id, b.doc_id AS b_id FROM sigs a "
-            f"JOIN sigs b ON md5({cols_a}) = md5({cols_b}) "
+            f"JOIN sigs b ON {_band_key_sql('a', bnd)} = {_band_key_sql('b', bnd)} "
             f"WHERE b.doc_id >= {split_id} "
             f"AND (a.doc_id < {split_id} OR a.doc_id < b.doc_id)"
         )
@@ -573,25 +542,20 @@ def incremental_dedup_sql(split_id: int) -> str:
 RARE_DF_MAX = 4  # doc-frequency cap on blocking shingles
 
 
-def _shingle_rows(pool: DataFrame) -> DataFrame:
-    """(doc_id, s): each doc's DISTINCT word-3-gram shingles, exploded."""
-    return pool.select(
-        "doc_id", F.explode(F.array_distinct(_shingles())).alias("s")
-    )
-
-
 def materialized_shingle_rows(pool: DataFrame, cache_key: str) -> DataFrame:
-    """Exploded shingle rows materialized per input fingerprint — BOTH
-    exact-Jaccard paths (rare-shingle index and AllPairs prefix filter)
-    build their inverted index from the identical rows; each was paying
-    the split+slide+explode recompute (~1.2 s at sf0.1). Derived from the
+    """(doc_id, s): each doc's DISTINCT word-3-gram shingles, exploded and
+    materialized per input fingerprint — BOTH exact-Jaccard paths
+    (rare-shingle index and AllPairs prefix filter) build their inverted
+    index from the identical rows; each was paying the
+    split+slide+explode recompute (~1.2 s at sf0.1). Derived from the
     materialized signature table's ``sh`` column (same shingle arrays —
     with_signatures computes them once), not re-shingled from text."""
-    from elb_pipeline.matcache import materialize
 
-    sigs = materialized_signatures(pool, cache_key=cache_key)
-    rows = sigs.select("doc_id", F.explode(F.array_distinct("sh")).alias("s"))
-    return materialize(rows, f"shingle_rows_{cache_key}", params=algo_params())
+    def build():
+        sigs = materialized_signatures(pool, cache_key)
+        return sigs.select("doc_id", F.explode(F.array_distinct("sh")).alias("s"))
+
+    return _node(pool, "shingle_rows", cache_key, build)
 
 
 def materialized_shingle_sets(pool: DataFrame, cache_key: str) -> DataFrame:
@@ -599,20 +563,16 @@ def materialized_shingle_sets(pool: DataFrame, cache_key: str) -> DataFrame:
     operand of _jaccard_verify), materialized per input fingerprint — the
     rare and prefix paths each verify against the same sets. Also derived
     from the signature table's shingle arrays."""
-    from elb_pipeline.matcache import materialize
 
-    sigs = materialized_signatures(pool, cache_key=cache_key)
-    hs = F.transform(F.array_distinct("sh"), lambda x: F.xxhash64(x))
-    return materialize(
-        sigs.select("doc_id", hs.alias("hs")),
-        f"shingle_sets_{cache_key}",
-        params=algo_params(),
-    )
+    def build():
+        sigs = materialized_signatures(pool, cache_key)
+        hs = F.transform(F.array_distinct("sh"), lambda x: F.xxhash64(x))
+        return sigs.select("doc_id", hs.alias("hs"))
+
+    return _node(pool, "shingle_sets", cache_key, build)
 
 
-def rare_shingle_pairs(
-    pool: DataFrame, cache_key: str | None = None
-) -> DataFrame:
+def rare_shingle_pairs(pool: DataFrame, cache_key: str) -> DataFrame:
     """Near-duplicate pairs (exact shingle-set Jaccard >= JACCARD_THRESHOLD)
     blocked on shingles with document frequency in [2, RARE_DF_MAX].
 
@@ -625,16 +585,9 @@ def rare_shingle_pairs(
     only. No sketch — the trade vs MinHash-LSH is a bigger candidate set at
     equal threshold, and a deterministic (not probabilistic) recall gap:
     dup cliques wider than RARE_DF_MAX are invisible (see module comment;
-    prefix_jaccard_pairs is the exact-recall variant).
-
-    ``cache_key``: reuse the materialized shingle rows / verify sets
-    shared with the prefix path (same values either way)."""
-    if cache_key is not None:
-        sh = materialized_shingle_rows(pool, cache_key)
-        sets_ = materialized_shingle_sets(pool, cache_key)
-    else:
-        sh = _shingle_rows(pool)
-        sets_ = None
+    prefix_jaccard_pairs is the exact-recall variant). Reads the shingle
+    rows / verify sets nodes it shares with the prefix path."""
+    sh = materialized_shingle_rows(pool, cache_key)
     rare = (
         sh.groupBy("s")
         .agg(F.count("*").alias("df"))
@@ -649,26 +602,22 @@ def rare_shingle_pairs(
         .select("a_id", "b_id")
         .distinct()
     )
-    return _jaccard_verify(cands, pool, sets_=sets_)
+    return _jaccard_verify(cands, materialized_shingle_sets(pool, cache_key))
 
 
-def _jaccard_verify(
-    cands: DataFrame, pool: DataFrame, sets_: DataFrame | None = None
-) -> DataFrame:
+def _jaccard_verify(cands: DataFrame, sets_: DataFrame) -> DataFrame:
     """Exact-Jaccard verify of ``cands(a_id, b_id)`` against the docs'
-    shingle SETS, shipped as 8-byte ``xxhash64`` arrays instead of the raw
-    shingle strings. Set sizes (hence Jaccard) are identical to the string
-    form absent an intra-pair 64-bit collision (~|union|^2 / 2^65 ≈ 1e-16
-    per pair — the DuckDB twins verify on plain strings, so any collision
-    would surface as an oracle mismatch). The byte win is the scale story:
+    distinct shingle SETS ``sets_(doc_id, hs)``. The LSH paths pass the
+    strings (``_string_sets``); the exact paths pass the shingle sets
+    node, 8-byte ``xxhash64`` arrays instead of the strings. Set sizes
+    (hence Jaccard) are identical to the string form absent an intra-pair
+    64-bit collision (~|union|^2 / 2^65 ≈ 1e-16 per pair — the DuckDB
+    twins verify on plain strings, so any collision would surface as an
+    oracle mismatch). The byte win is the scale story:
     the candidate join's intermediates carry ~8 B/shingle instead of the
     ~30 B/shingle strings — at 233k docs the string form's verify stage
     spilled >65 GB and died on ENOSPC; the hashed form fits (measured,
-    BENCH/dedup_scaling.py prefix). ``sets_`` overrides the per-call
-    recompute with a shared (materialized) set table."""
-    if sets_ is None:
-        hs = F.transform(F.array_distinct(_shingles()), lambda x: F.xxhash64(x))
-        sets_ = pool.select("doc_id", hs.alias("hs"))
+    BENCH/dedup_scaling.py prefix)."""
     a = sets_.select(F.col("doc_id").alias("a_id"), F.col("hs").alias("a_sh"))
     b = sets_.select(F.col("doc_id").alias("b_id"), F.col("hs").alias("b_sh"))
     jac = F.size(F.array_intersect("a_sh", "b_sh")) / F.size(
@@ -682,8 +631,10 @@ def _jaccard_verify(
     )
 
 
-def rare_shingle_pairs_sql() -> str:
-    """Full DuckDB twin (standalone statement over doc_pool)."""
+def _exact_pairs_sql(cands_ctes: str) -> str:
+    """Standalone DuckDB statement over doc_pool: ``cands_ctes`` reads the
+    ``sh(doc_id, s)`` rows and defines ``cands(a_id, b_id)``, which are
+    verified on the exact shingle sets."""
     sh_expr = _SHINGLES_SQL.replace("ws", "string_split(text, ' ')")
     jac = (
         "CAST(length(list_intersect(a.shs, b.shs)) AS DOUBLE) / "
@@ -692,16 +643,23 @@ def rare_shingle_pairs_sql() -> str:
     return (
         f"WITH {doc_pool_cte()}, "
         f"sh AS (SELECT DISTINCT doc_id, unnest({sh_expr}) AS s FROM doc_pool), "
-        "rare AS (SELECT s FROM sh GROUP BY s "
-        f"HAVING count(*) BETWEEN 2 AND {RARE_DF_MAX}), "
-        "cands AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id "
-        "FROM sh a JOIN rare USING (s) JOIN sh b USING (s) "
-        "WHERE a.doc_id < b.doc_id), "
+        f"{cands_ctes}, "
         f"sets AS (SELECT doc_id, list_distinct({sh_expr}) AS shs "
         "FROM doc_pool) "
         f"SELECT c.a_id, c.b_id, round({jac}, 4) AS jaccard FROM cands c "
         "JOIN sets a ON a.doc_id = c.a_id JOIN sets b ON b.doc_id = c.b_id "
         f"WHERE round({jac}, 4) >= {JACCARD_THRESHOLD}"
+    )
+
+
+def rare_shingle_pairs_sql() -> str:
+    """Full DuckDB twin (standalone statement over doc_pool)."""
+    return _exact_pairs_sql(
+        "rare AS (SELECT s FROM sh GROUP BY s "
+        f"HAVING count(*) BETWEEN 2 AND {RARE_DF_MAX}), "
+        "cands AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id "
+        "FROM sh a JOIN rare USING (s) JOIN sh b USING (s) "
+        "WHERE a.doc_id < b.doc_id)"
     )
 
 
@@ -744,9 +702,7 @@ def rare_shingle_pairs_sql() -> str:
 # ---------------------------------------------------------------------------
 
 
-def prefix_jaccard_pairs(
-    pool: DataFrame, cache_key: str | None = None
-) -> DataFrame:
+def prefix_jaccard_pairs(pool: DataFrame, cache_key: str) -> DataFrame:
     """Exact near-duplicate pairs (shingle-set Jaccard >= JACCARD_THRESHOLD)
     via the AllPairs prefix filter — deterministic AND recall-complete.
 
@@ -758,17 +714,10 @@ def prefix_jaccard_pairs(
     candidate set is 2.5x larger and the string-array verify spilled the
     disk at 233k docs), Jaccard verify on candidates only over 8-byte
     hashed shingle sets. All shuffles are on doc_id or shingle; no
-    all-pairs stage exists at any width.
-
-    ``cache_key``: reuse the materialized shingle rows / verify sets
-    shared with the rare-shingle path (same values either way)."""
+    all-pairs stage exists at any width. Reads the shingle rows / verify
+    sets nodes it shares with the rare-shingle path."""
     t = JACCARD_THRESHOLD
-    if cache_key is not None:
-        sh = materialized_shingle_rows(pool, cache_key)
-        sets_ = materialized_shingle_sets(pool, cache_key)
-    else:
-        sh = _shingle_rows(pool)
-        sets_ = None
+    sh = materialized_shingle_rows(pool, cache_key)
     dfs = sh.groupBy("s").agg(F.count("*").alias("df"))
     order_w = Window.partitionBy("doc_id").orderBy("df", "s")
     ranked = (
@@ -820,20 +769,13 @@ def prefix_jaccard_pairs(
         .where(F.col("best_ub") >= alpha)
         .select("a_id", "b_id")
     )
-    return _jaccard_verify(cands, pool, sets_=sets_)
+    return _jaccard_verify(cands, materialized_shingle_sets(pool, cache_key))
 
 
 def prefix_jaccard_pairs_sql() -> str:
     """Full DuckDB twin (standalone statement over doc_pool)."""
     t = JACCARD_THRESHOLD
-    sh_expr = _SHINGLES_SQL.replace("ws", "string_split(text, ' ')")
-    jac = (
-        "CAST(length(list_intersect(a.shs, b.shs)) AS DOUBLE) / "
-        "length(list_distinct(a.shs || b.shs))"
-    )
-    return (
-        f"WITH {doc_pool_cte()}, "
-        f"sh AS (SELECT DISTINCT doc_id, unnest({sh_expr}) AS s FROM doc_pool), "
+    return _exact_pairs_sql(
         "dfs AS (SELECT s, count(*) AS df FROM sh GROUP BY s), "
         "ranked AS (SELECT doc_id, sh.s, "
         "row_number() OVER (PARTITION BY doc_id ORDER BY df, sh.s) AS pos, "
@@ -844,12 +786,7 @@ def prefix_jaccard_pairs_sql() -> str:
         "cands AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id "
         "FROM pre a JOIN pre b USING (s) "
         "WHERE a.doc_id < b.doc_id "
-        f"AND {t} * a.n <= b.n AND {t} * b.n <= a.n), "
-        f"sets AS (SELECT doc_id, list_distinct({sh_expr}) AS shs "
-        "FROM doc_pool) "
-        f"SELECT c.a_id, c.b_id, round({jac}, 4) AS jaccard FROM cands c "
-        "JOIN sets a ON a.doc_id = c.a_id JOIN sets b ON b.doc_id = c.b_id "
-        f"WHERE round({jac}, 4) >= {JACCARD_THRESHOLD}"
+        f"AND {t} * a.n <= b.n AND {t} * b.n <= a.n)"
     )
 
 
@@ -922,37 +859,25 @@ simhash32 = F.pandas_udf(_simhash32_batch, T.LongType())
 # connected components → dup groups
 # ---------------------------------------------------------------------------
 
-def dup_groups(pairs: DataFrame, cache_key: str | None = None) -> DataFrame:
+def dup_groups(pairs: DataFrame, cache_key: str) -> DataFrame:
     """(doc_id, group_id) for every doc in a verified pair; group_id is the
     min doc_id of its connected component (iterative min-label
     propagation — converges in O(log diameter) rounds).
 
-    The converged label table is materialized to parquet
-    (matcache.materialize) and EVERY RDD this call persisted — the
-    pairs/edges caches and each iteration's lineage-truncating
-    localCheckpoint — is released before returning, so a long-lived
-    session accumulates no storage. That is also the 100-TB shape: the
-    group table is a real table every downstream consumer reads, not
-    driver-session cache state. ``cache_key`` keys the parquet (reused
-    across identical calls); without one a per-call key is generated."""
-    import uuid
-
-    from elb_pipeline.matcache import lookup, materialize
-
-    if cache_key is not None:
-        # Cache-first: the fixpoint loop below is EAGER driver-side work
-        # (edges.count + one changed-count job per round), so a post-hoc
-        # materialize() can't skip it — every consumer of the same groups
-        # table (lsh_groups, leakproof_split, training_corpus,
-        # corpus_sequences) was re-running label propagation from scratch.
-        cached = lookup(
-            pairs.sparkSession, f"dup_groups_{cache_key}", params=algo_params()
-        )
-        if cached is not None:
-            return cached
-
+    The fixpoint loop is EAGER driver-side work (edges.count + one
+    changed-count job per round), so it runs inside the node's ``build``:
+    on a cache hit no round runs at all (every consumer of the groups
+    table — lsh_groups, leakproof_split, training_corpus,
+    corpus_sequences — was re-running label propagation from scratch).
+    On a miss the converged label table is written to parquet and EVERY
+    RDD this call persisted — the pairs/edges caches and each iteration's
+    lineage-truncating localCheckpoint — is released after the write, so
+    a long-lived session accumulates no storage. That is also the 100-TB
+    shape: the group table is a real table every downstream consumer
+    reads, not driver-session cache state."""
     sc = pairs.sparkSession.sparkContext
-    owned_rdd_ids: set = set()  # ids of the RDDs THIS call persists
+    held: list[DataFrame] = []  # frames THIS call persisted
+    owned_rdd_ids: set = set()  # ids of the checkpoint RDDs THIS call made
 
     def _lc(df: DataFrame) -> DataFrame:
         """localCheckpoint with the persisted-RDD id recorded as OURS —
@@ -969,59 +894,62 @@ def dup_groups(pairs: DataFrame, cache_key: str | None = None) -> DataFrame:
         owned_rdd_ids.add(out._jdf.queryExecution().analyzed().rdd().id())
         return out
 
-    pairs = pairs.persist()  # read twice (both edge directions) below
-    edges = (
-        pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
-        .unionByName(pairs.select(F.col("b_id").alias("src"), F.col("a_id").alias("dst")))
-        .distinct()
-        .persist()  # every iteration joins against edges — compute once
-    )
-    edges.count()  # materializes edges; pairs no longer needed
-    pairs.unpersist()
-    labels = _lc(
-        edges.select(F.col("src").alias("node")).distinct()
-        .withColumn("label", F.col("node"))
-    )
-    while True:
-        # neighbor-min pass: label(node) ← min(label(node), min over
-        # neighbors' labels). localCheckpoint truncates the lineage each
-        # round — otherwise iteration k replays all k-1 previous rounds
-        # (and the whole candidate derivation) from scratch. At scale each
-        # round is one shuffle and the loop is a driver-side fixpoint check.
-        nbr = (
-            edges.join(labels, edges.dst == labels.node)
-            .select(edges.src.alias("node"), "label")
+    def build() -> DataFrame:
+        held.append(pairs.persist())  # read twice (both edge directions)
+        edges = (
+            pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
+            .unionByName(
+                pairs.select(F.col("b_id").alias("src"), F.col("a_id").alias("dst"))
+            )
+            .distinct()
+            .persist()  # every iteration joins against edges — compute once
         )
-        new_labels = _lc(
-            labels.select("node", "label").unionByName(nbr)
-            .groupBy("node").agg(F.min("label").alias("label"))
+        held.append(edges)
+        edges.count()  # materializes edges; pairs no longer needed
+        pairs.unpersist()
+        labels = _lc(
+            edges.select(F.col("src").alias("node")).distinct()
+            .withColumn("label", F.col("node"))
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .where(F.col("n.label") != F.col("o.label"))
-            .limit(1).count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    out = labels.select(
-        F.col("node").alias("doc_id"), F.col("label").alias("group_id")
-    )
-    out = materialize(
-        out,
-        f"dup_groups_{cache_key or uuid.uuid4().hex[:12]}",
-        params=algo_params(),
-    )
-    edges.unpersist()
-    # release exactly the checkpoint RDDs THIS call created (tracked in
-    # _lc above); the result now reads parquet, so none of them back it.
-    jmap = sc._jsc.getPersistentRDDs()
-    for rdd_id in owned_rdd_ids:
-        jrdd = jmap.get(rdd_id)
-        if jrdd is not None:
-            jrdd.unpersist(False)
-    return out
+        while True:
+            # neighbor-min pass: label(node) ← min(label(node), min over
+            # neighbors' labels). localCheckpoint truncates the lineage
+            # each round — otherwise iteration k replays all k-1 previous
+            # rounds (and the whole candidate derivation) from scratch. At
+            # scale each round is one shuffle and the loop is a driver-side
+            # fixpoint check.
+            nbr = (
+                edges.join(labels, edges.dst == labels.node)
+                .select(edges.src.alias("node"), "label")
+            )
+            new_labels = _lc(
+                labels.select("node", "label").unionByName(nbr)
+                .groupBy("node").agg(F.min("label").alias("label"))
+            )
+            changed = (
+                new_labels.alias("n")
+                .join(labels.alias("o"), "node")
+                .where(F.col("n.label") != F.col("o.label"))
+                .limit(1).count()
+            )
+            labels = new_labels
+            if changed == 0:
+                return labels.select(
+                    F.col("node").alias("doc_id"), F.col("label").alias("group_id")
+                )
+
+    try:
+        return _node(pairs, "dup_groups", cache_key, build)
+    finally:
+        # the result reads parquet, so none of these back it; release
+        # exactly what THIS call persisted (tracked above)
+        for df in held:
+            df.unpersist()
+        jmap = sc._jsc.getPersistentRDDs()
+        for rdd_id in owned_rdd_ids:
+            jrdd = jmap.get(rdd_id)
+            if jrdd is not None:
+                jrdd.unpersist(False)
 
 
 def dup_groups_cte() -> str:

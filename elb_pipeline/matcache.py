@@ -1,17 +1,20 @@
 """Deterministic parquet materialization for expensive intermediates.
 
-``materialize(df, key)`` writes ``df`` once to a content-keyed /tmp
-directory (atomic rename — concurrent first runs never observe a
-half-written cache) and returns the read-back frame. This is the
-100-TB shape for reused intermediates: a signature/sketch table is
-computed ONCE, written as a real table, and every downstream join reads
-the parquet — no lingering ``.persist()`` state in a long-lived session
-(Spark's in-memory columnar cache also measured pathological on long
-text columns; see BENCH/BASELINE.md).
+One rule caches every intermediate: ``cached(spark, key, params, build)``
+reads ``<ELB_MAT_CACHE>/<key>-v<params_token(params)>`` when its
+``_SUCCESS`` marker exists; otherwise it calls ``build()``, writes the
+frame once (``write_once``: atomic rename, so concurrent first runs never
+observe a half-written cache) and reads it back. ``build`` runs only on a
+miss, so an eager ``build`` (a driver-side fixpoint loop) skips all its work
+on a hit. This is the 100-TB shape for reused intermediates: a
+signature/sketch table is computed ONCE, written as a real table, and
+every downstream join reads the parquet — no lingering ``.persist()``
+state in a long-lived session (Spark's in-memory columnar cache also
+measured pathological on long text columns; see BENCH/BASELINE.md).
 
-``dir_fingerprint`` keys caches on the INPUT's identity (file names +
-sizes + mtimes), so regenerated test data at the same path can never
-serve a stale cache.
+``dir_fingerprint`` keys caches on the INPUT's identity (relative path +
+size + mtime of every file below it), so regenerated test data at the
+same path can never serve a stale cache.
 """
 
 from __future__ import annotations
@@ -19,6 +22,7 @@ from __future__ import annotations
 import hashlib
 import os
 import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
@@ -49,52 +53,47 @@ def params_token(params: tuple) -> str:
 
 
 def dir_fingerprint(path: str) -> str:
-    """md5 over (basename, size, mtime_ns) of a parquet file/directory."""
+    """md5 over (relative path, size, mtime_ns) of a file, or of every file
+    anywhere below a directory — a rewrite inside a partition
+    subdirectory changes it too."""
+    if os.path.isfile(path):
+        files = [(os.path.basename(path), path)]
+    else:
+        files = sorted(
+            (os.path.relpath(os.path.join(base, f), path), os.path.join(base, f))
+            for base, _, names in os.walk(path)
+            for f in names
+        )
     h = hashlib.md5()
-    entries = (
-        [path]
-        if os.path.isfile(path)
-        else sorted(os.path.join(path, f) for f in os.listdir(path))
-    )
-    for f in entries:
+    for rel, f in files:
         st = os.stat(f)
-        h.update(f"{os.path.basename(f)}:{st.st_size}:{st.st_mtime_ns}".encode())
+        h.update(f"{rel}:{st.st_size}:{st.st_mtime_ns}".encode())
     return h.hexdigest()[:12]
 
 
-def cache_path(key: str, params: tuple = ()) -> str:
-    """Cache directory a (key, params) pair materializes to."""
-    return os.path.join(_cache_root(), f"{key}-v{params_token(params)}")
+def write_once(df: DataFrame, path: str) -> None:
+    """Write ``df`` as parquet to ``path`` through a private
+    ``<path>.tmp.<pid>`` directory renamed into place, so ``path`` only
+    ever appears complete. When a concurrent writer wins the rename, its
+    copy is kept and this one removed."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = f"{path}.tmp.{os.getpid()}"
+    df.write.mode("overwrite").parquet(tmp)
+    try:
+        os.rename(tmp, path)
+    except OSError:  # lost the race — the winner's copy is complete
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
-def lookup(spark, key: str, params: tuple = ()):
-    """Return the cached frame for (key, params) if it is already
-    materialized, else None. Lets EAGER builders (driver-side fixpoint
-    loops like dedup.dup_groups) skip their whole computation on a cache
-    hit — ``materialize`` alone only helps LAZY inputs, because the caller
-    has already run its Spark jobs by the time materialize() checks the
-    cache (measured: every dup-groups consumer re-ran label propagation
-    from scratch, ~2-3 s per query at sf0.1)."""
-    path = cache_path(key, params)
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return spark.read.parquet(path)
-    return None
-
-
-def materialize(df: DataFrame, key: str, params: tuple = ()) -> DataFrame:
-    """Write ``df`` to the cache under ``key`` (first caller wins the
-    atomic rename race) and return the parquet read-back. ``params`` is
-    the tuple of algorithm constants / kernel source the frame's contents
-    depend on — it is hashed into the directory name, so a logic change
-    always misses the old cache instead of silently reusing it."""
-    root = _cache_root()
-    path = os.path.join(root, f"{key}-v{params_token(params)}")
+def cached(
+    spark, key: str, params: tuple, build: Callable[[], DataFrame]
+) -> DataFrame:
+    """The frame cached under (``key``, ``params``), built and written by
+    ``build()`` on a miss. ``params`` is the tuple of algorithm constants /
+    kernel source the frame's contents depend on — it is hashed into the
+    directory name, so a logic change always misses the old cache instead
+    of silently reusing it."""
+    path = os.path.join(_cache_root(), f"{key}-v{params_token(params)}")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        os.makedirs(root, exist_ok=True)
-        tmp = f"{path}.tmp.{os.getpid()}"
-        df.write.mode("overwrite").parquet(tmp)
-        try:
-            os.rename(tmp, path)
-        except OSError:  # lost the race — the winner's copy is complete
-            shutil.rmtree(tmp, ignore_errors=True)
-    return df.sparkSession.read.parquet(path)
+        write_once(build(), path)
+    return spark.read.parquet(path)

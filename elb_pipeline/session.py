@@ -2,9 +2,12 @@
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
 
 
 def perf_conf(heap: str = "24g") -> dict[str, str]:
@@ -137,5 +140,5 @@ def _warm_session(spark: SparkSession) -> None:
                 Window.partitionBy(F.col("id") % 4).orderBy("id")
             ).alias("r"),
         ).count()
-    except Exception:
-        pass  # warm-up must never break session creation
+    except Exception:  # warm-up must never break session creation
+        log.warning("session warm-up failed; continuing cold", exc_info=True)

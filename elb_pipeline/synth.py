@@ -15,11 +15,14 @@ Two generators, both fully deterministic (no wall clock, no RNG):
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from elb_pipeline.enrich import ROLES, TOOLS
 from elb_pipeline.goldens import TEXT_POOL
+from elb_pipeline.matcache import dir_fingerprint, write_once
 
 POOL_N = len(TEXT_POOL)
 EPOCH = "2022-11-01 00:00:00"  # fixed; spans 3+ days via per-row offsets
@@ -67,34 +70,15 @@ def transcripts_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
 def transcripts_cache_path(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the transcripts table for ``sf_dir`` (if not already)
     and return its parquet path — for consumers that need the PATH, e.g.
-    ``readStream`` sources."""
-    import hashlib
-    import os
-
-    # Key the cache on a content fingerprint of the events input (file
-    # names + sizes + mtimes), not just the sf_dir basename: regenerated
-    # test data at the same path must not serve a stale cache.
+    ``readStream`` sources. Keyed on the events input's fingerprint, so
+    regenerated test data at the same path never serves a stale cache;
+    kept outside ``ELB_MAT_CACHE`` so a harness's cold per-invocation
+    cache does not rebuild transcripts."""
     ev_dir = os.path.join(sf_dir, "events.parquet")
-    h = hashlib.md5()
-    entries = [ev_dir] if os.path.isfile(ev_dir) else sorted(
-        os.path.join(ev_dir, f) for f in os.listdir(ev_dir)
-    )
-    for f in entries:
-        st = os.stat(f)
-        h.update(f"{os.path.basename(f)}:{st.st_size}:{st.st_mtime_ns}".encode())
     tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = f"/tmp/elb_transcripts_cache_v3_{tag}_{h.hexdigest()[:12]}"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        # Write to a private temp dir, then atomically rename into place so
-        # two concurrent first runs never read a half-written directory.
-        tmp = f"{path}.tmp.{os.getpid()}"
-        transcripts_from_events(spark, sf_dir).write.mode("overwrite").parquet(tmp)
-        try:
-            os.rename(tmp, path)
-        except OSError:  # another process won the race — use its copy
-            import shutil
-
-            shutil.rmtree(tmp, ignore_errors=True)
+    path = f"/tmp/elb_transcripts_cache_v3_{tag}_{dir_fingerprint(ev_dir)}"
+    if not os.path.exists(path):  # only ever appears complete (write_once)
+        write_once(transcripts_from_events(spark, sf_dir), path)
     return path
 
 

@@ -11,6 +11,9 @@ This is the test that pins the semantics triangle:
                                           sf0.001, all in one 5-doc clique)
     minhash_lsh pairs   <=  prefix       (LSH verifies exact Jaccard on
                                           candidates, so no false pairs)
+
+The rare and prefix paths run keyed, under a private ELB_MAT_CACHE, so
+the oracle checks the cached shingle rows / sets nodes the queries read.
 """
 
 from __future__ import annotations
@@ -53,6 +56,13 @@ def pool(spark):
 
 
 @pytest.fixture(scope="module")
+def cache_key(tmp_path_factory):
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setenv("ELB_MAT_CACHE", str(tmp_path_factory.mktemp("matcache")))
+        yield "parity"
+
+
+@pytest.fixture(scope="module")
 def truth(duck):
     rows = duck.execute(_brute_force_sql()).fetchall()
     pairs = {(a, b, j) for a, b, j in rows}
@@ -60,16 +70,22 @@ def truth(duck):
     return pairs
 
 
-def test_prefix_filter_is_exact(pool, truth):
-    got = {(r.a_id, r.b_id, r.jaccard) for r in prefix_jaccard_pairs(pool).collect()}
+def test_prefix_filter_is_exact(pool, cache_key, truth):
+    got = {
+        (r.a_id, r.b_id, r.jaccard)
+        for r in prefix_jaccard_pairs(pool, cache_key).collect()
+    }
     assert got == truth, (
         f"prefix filter diverges from brute force: "
         f"missing={sorted(truth - got)[:5]} extra={sorted(got - truth)[:5]}"
     )
 
 
-def test_rare_path_is_sound_subset(pool, truth):
-    got = {(r.a_id, r.b_id, r.jaccard) for r in rare_shingle_pairs(pool).collect()}
+def test_rare_path_is_sound_subset(pool, cache_key, truth):
+    got = {
+        (r.a_id, r.b_id, r.jaccard)
+        for r in rare_shingle_pairs(pool, cache_key).collect()
+    }
     assert got <= truth, f"rare path emitted false pairs: {sorted(got - truth)[:5]}"
     # the documented blind spot: any miss must be inside a dup clique wider
     # than RARE_DF_MAX — i.e. both endpoints of a missed pair appear in

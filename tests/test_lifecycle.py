@@ -5,6 +5,8 @@ matcache (parquet write + read-back); the only transient persists
 
 from __future__ import annotations
 
+import os
+
 SF_DIR = "/root/testdata/sf0.001"
 
 
@@ -63,18 +65,93 @@ def test_dup_groups_leaves_foreign_caches_alone(spark):
 def test_matcache_params_token_busts_stale_cache(spark, tmp_path, monkeypatch):
     """Changing the algorithm params must MISS the old cache entry instead
     of serving parquet computed by the previous version of the logic
-    (ADVICE r3): same key + different params → different directory."""
-    from elb_pipeline.matcache import materialize
+    (ADVICE r3): same key + different params → different directory. A hit
+    never calls ``build``; a miss leaves no temp directory behind."""
+    from elb_pipeline.matcache import cached
 
-    monkeypatch.setenv("ELB_MAT_CACHE", str(tmp_path / "cache"))
+    cache = tmp_path / "cache"
+    monkeypatch.setenv("ELB_MAT_CACHE", str(cache))
     v1 = spark.range(3).toDF("x")
-    got1 = materialize(v1, "k", params=("threshold", 0.5))
+    got1 = cached(spark, "k", ("threshold", 0.5), lambda: v1)
     assert sorted(r["x"] for r in got1.collect()) == [0, 1, 2]
 
     v2 = spark.range(5).toDF("x")  # "new logic" produces different rows
     # same params → cache HIT: still the old 3 rows
-    hit = materialize(v2, "k", params=("threshold", 0.5))
+    hit = cached(spark, "k", ("threshold", 0.5), lambda: v2)
     assert hit.count() == 3
+
+    def boom():
+        raise AssertionError("build called on a cache hit")
+
+    assert cached(spark, "k", ("threshold", 0.5), boom).count() == 3
     # changed params → MISS: the new frame is materialized
-    miss = materialize(v2, "k", params=("threshold", 0.7))
+    miss = cached(spark, "k", ("threshold", 0.7), lambda: v2)
     assert miss.count() == 5
+    assert not [d for d in os.listdir(cache) if ".tmp." in d]
+
+
+def test_dedup_family_cold_writes_each_node_once(spark, tmp_path, monkeypatch):
+    """Every dedup DAG node is written exactly once on a cold cache, and a
+    second pass over the family writes nothing (cache-first)."""
+    from elb_pipeline import dedup as D
+    from elb_pipeline import matcache
+
+    monkeypatch.setenv("ELB_MAT_CACHE", str(tmp_path))
+    writes: list[str] = []
+    real = matcache.write_once
+
+    def counting(df, path):
+        writes.append(os.path.basename(path))
+        real(df, path)
+
+    monkeypatch.setattr(matcache, "write_once", counting)
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    for _ in range(2):
+        pool = D.materialized_doc_pool(docs, "fam")
+        sigs = D.materialized_signatures(pool, "fam")
+        D.dup_groups(D.materialized_verified_pairs(sigs, "fam"), "fam").count()
+        D.rare_shingle_pairs(pool, "fam").count()
+        D.prefix_jaccard_pairs(pool, "fam").count()
+        D.incremental_dedup(pool, sigs, D.EXACT_OFFSET).count()
+    nodes = ("doc_pool", "minhash_sigs", "verified_pairs", "dup_groups",
+             "shingle_rows", "shingle_sets")
+    assert sorted(w.split("_fam-v")[0] for w in writes) == sorted(nodes)
+    assert sorted(writes) == sorted(
+        d for d in os.listdir(tmp_path) if ".tmp." not in d
+    )
+
+
+def test_dir_fingerprint_sees_nested_files(tmp_path):
+    """A rewrite inside a partition subdirectory must change the input
+    fingerprint, or a cache keyed on it serves stale data."""
+    from elb_pipeline.matcache import dir_fingerprint
+
+    f = tmp_path / "d" / "part=1" / "f.parquet"
+    f.parent.mkdir(parents=True)
+    f.write_bytes(b"a" * 10)
+    before = dir_fingerprint(str(tmp_path / "d"))
+    f.write_bytes(b"b" * 20)
+    assert dir_fingerprint(str(tmp_path / "d")) != before
+
+
+def test_warm_session_failure_is_logged_not_raised(caplog):
+    """Session warm-up never breaks session creation, but a failure is
+    reported instead of silently swallowed."""
+    from types import SimpleNamespace
+
+    from elb_pipeline.session import _warm_session
+
+    def broken_range(*_a, **_k):
+        raise RuntimeError("range failed")
+
+    stub = SimpleNamespace(
+        sparkContext=SimpleNamespace(
+            applicationId="stub-warm-failure", defaultParallelism=2
+        ),
+        range=broken_range,
+    )
+    with caplog.at_level("WARNING", logger="elb_pipeline.session"):
+        _warm_session(stub)
+    assert any(
+        "warm-up failed" in r.getMessage() and r.exc_info for r in caplog.records
+    )
